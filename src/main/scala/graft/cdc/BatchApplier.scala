@@ -110,29 +110,26 @@ object BatchApplier {
       // point lookup: a catch-up storm batch can hold millions of
       // distinct keys — hundreds of MB resident on every executor — so
       // above the cap the planner picks the join and the snapshot merely
-      // shuffles for that oversized trigger. Callers that already know
-      // the distinct-key count (the bucketed applyBatch's keyStats) pass
-      // it through and the key side stays a lazy plan; otherwise the
-      // distinct-key frame is PINNED and counted — the count job and the
-      // broadcast build then share ONE id-derivation pass over the batch
-      // instead of each re-deriving it (probed at sf0.1: the separate
-      // count job alone cost ~0.2 s of cdc_pipeline_state's ~0.8 s,
-      // guide §1.4/§5).
-      // (When the count is caller-supplied the key side stays the lazy
-      // plan it always was: distinct under the broadcast cap, the PLAIN
-      // raw-id exchange above it — the no-aggregate shape AQE's
-      // OptimizeSkewedJoin pattern-matches, pinned by
-      // MultiBatchPropertySpec.)
+      // shuffles for that oversized trigger. Callers that already hold
+      // a bound on the distinct-key count (the legacy tail passes the
+      // batch's row count, the bucketed apply a padded HLL estimate)
+      // pass it through, and the key side is the
+      // batch's RAW ids: a semi join needs no distinct, so no aggregate
+      // shuffle precedes the broadcast, and above the cap it is the PLAIN
+      // raw-id exchange AQE's OptimizeSkewedJoin pattern-matches (pinned
+      // by MultiBatchPropertySpec). Otherwise the distinct-key frame is
+      // PINNED and counted — the count job and the broadcast build then
+      // share ONE id-derivation pass over the batch instead of each
+      // re-deriving it (probed at sf0.1: the separate count job alone
+      // cost ~0.2 s of cdc_pipeline_state's ~0.8 s, guide §1.4/§5).
       val (nKeys, pinnedKeys) = batchKeyCount match {
         case Some(n) => (n, None)
         case None =>
           val keys = events.select(col("id")).distinct().localCheckpoint()
           (keys.count(), Some(keys.toDF))
       }
-      val keyJoin =
-        if (nKeys <= BucketedStateStore.BroadcastKeyLimit)
-          broadcast(pinnedKeys.getOrElse(events.select(col("id")).distinct()))
-        else pinnedKeys.getOrElse(events.select(col("id")))
+      val ids = pinnedKeys.getOrElse(events.select(col("id")))
+      val keyJoin = if (nKeys <= BucketedStateStore.BroadcastKeyLimit) broadcast(ids) else ids
       src.join(keyJoin, Seq("id"), "left_semi")
         .select(
           col("id"), lit(1).as("kind"), srcTs.as("ts"), lit("").as("op"), lit("").as("ns"),

@@ -14,9 +14,13 @@ import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
   * cannot survive state ≫ batch. This store makes the per-batch cost a
   * function of the BATCH, not the state:
   *
-  *  - The key space is hash-partitioned into a FIXED number of buckets
+  *  - The key space is hash-partitioned into `nBuckets` buckets
   *    (`pmod(hash(id), nBuckets)`); each bucket owns one BASE file
-  *    directory (id-sorted parquet).
+  *    directory (id-sorted parquet). The count is recorded in the
+  *    manifest: the scan backfill picks it from the snapshot's size
+  *    ([[bucketsFor]]), and compaction doubles it (the rewrite
+  *    [[reshard]] does) once a bucket's base outgrows the target (see
+  *    Sizing below).
   *  - Data files are immutable. A micro-batch commit writes ONE shared
   *    DELTA directory holding the batch's per-key outcomes (upserts +
   *    delete tombstones) — an O(batch) write in O(task-count) files,
@@ -48,12 +52,31 @@ import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
   * key-local batch, row-group min/max skipping prunes below bucket
   * granularity.
   *
-  * Sizing at 100 TB: pick `nBuckets ≈ state_bytes / 128 MB` so a bucket
-  * is one healthy parquet file; per-batch read cost is then
-  * `dirtyBuckets/nBuckets × state` in the worst (uniformly random keys)
-  * case and `O(batch)` when updates exhibit key locality (the common
-  * CDC regime — hot working set), while the WRITE cost is always
-  * O(batch). This is the LSM trade: reads pay a bounded delta-chain
+  * Sizing: `nBuckets ≈ state_bytes / TargetBucketBytes` (16 MB),
+  * clamped to `[1, Spec.nBuckets]`. The scan backfill
+  * ([[graft.pipeline.ScanJob.backfill]]) applies the rule to the
+  * snapshot frame's size statistic; a source without a statistic seeds
+  * the cap. The target is set by per-trigger cost, not by file-size
+  * convention. A bucket is the unit of lookup pruning and of base-write
+  * parallelism (a seed, compaction or growth step writes one task per
+  * bucket), while every leaf dir costs a listing entry and a file open
+  * on each read, and past 32 paths Spark lists them in a job of its
+  * own. Measured with `graft.tools.StateScaling` (16 uniform triggers,
+  * local[2], BASELINE.md round-7 note): a 56 MB state ran its triggers
+  * fastest at 4–16 buckets, 18% slower at 1 and 12% slower at 64; a
+  * 6 MB state ran fastest at 1 bucket, in half the time of 64. When a
+  * compaction leaves a base above the target and the count is under the
+  * cap, the commit doubles the count. That trigger rewrites the whole
+  * state, at most `Spec.nBuckets / 2 × TargetBucketBytes` (512 MB at
+  * the defaults), once per doubling. Below the cap a store has fewer
+  * buckets than a cap-sized layout: a trigger with fewer keys than
+  * buckets reads more of the state, and a trigger that dirties every
+  * bucket compacts them all in the same trigger (a cap-sized layout
+  * does the same once triggers carry more keys than it has buckets).
+  * Per-batch read cost is `dirtyBuckets/nBuckets × state` in the worst
+  * (uniformly random keys) case and `O(batch)` when updates exhibit key
+  * locality (the common CDC regime — hot working set), while the WRITE
+  * cost is always O(batch). This is the LSM trade: reads pay a bounded delta-chain
   * merge, writes never touch cold data.
   *
   * Crash safety: data writes land before the manifest pointer swap, so
@@ -66,14 +89,23 @@ import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
   */
 object BucketedStateStore {
 
-  /** Tuning: `nBuckets` fixes the key partitioning at creation (stored
-    * in the manifest — later Specs cannot change it); `compactThreshold`
-    * bounds a bucket's delta-chain length; `retainManifests` bounds
-    * time-travel history (and therefore disk) for [[vacuum]]. */
+  /** Tuning. `nBuckets` caps the bucket count: the backfill seeds
+    * `min(nBuckets, ceil(snapshot bytes / TargetBucketBytes))` buckets
+    * ([[bucketsFor]]), compaction doubles the count up to this cap, and
+    * a store the tail creates from nothing (no backfill) starts at it.
+    * The manifest records the count in force — a later Spec never
+    * re-buckets an existing store by itself. `compactThreshold` bounds
+    * a bucket's delta-chain length; `retainManifests` bounds
+    * time-travel history (and therefore disk) for [[vacuum]], across
+    * growth steps too. */
   final case class Spec(
       nBuckets: Int = 64,
       compactThreshold: Int = 8,
       retainManifests: Int = 3)
+
+  /** The per-bucket base size the sizing rule aims at (the class doc's
+    * Sizing paragraph gives the measurements behind it). */
+  final val TargetBucketBytes: Long = 16L << 20
 
   final case class BucketFiles(base: Option[String], deltas: Vector[String]) {
     def paths: Seq[String] = base.toSeq ++ deltas
@@ -174,30 +206,44 @@ object BucketedStateStore {
     * `__seq` version. So: base dirs scan unscoped (a base leaf holds
     * exactly one bucket's rows by construction), while each delta dir
     * is filtered to the buckets whose CURRENT chain references it.
-    * Deltas sharing an owner set share one scan, so every live file is
-    * still read exactly once. */
+    *
+    * Every live file is read by ONE parquet scan. Each data dir is
+    * written by one commit and stamps that commit's seq on all its rows
+    * (`data/base_<seq>`, `data/delta_<seq>`), so the scoping is a row
+    * predicate on `(__seq, bucket)` rather than a union of per-dir
+    * scans — a union would make every join above it (the point
+    * lookup's semi join) run once per branch. */
   private def scanBuckets(
       spark: SparkSession, dir: String, m: Manifest, buckets: Iterable[Int]): DataFrame = {
-    val bs = buckets.toSet
-    val basePaths = bs.toSeq.sorted
-      .flatMap(b => m.buckets.get(b).flatMap(_.base)).map(rel => s"$dir/$rel")
-    val deltaOwners: Map[String, Set[Int]] = bs.toSeq
+    val bs = buckets.toSeq.sorted
+    val baseRels = bs.flatMap(b => m.buckets.get(b).flatMap(_.base))
+    // delta dir -> the buckets whose chain references it, grouped by
+    // owner set so deltas with the same owners share one predicate term
+    val ownerGroups: Seq[(Seq[Int], Seq[String])] = bs
       .flatMap(b => m.buckets.get(b).toSeq.flatMap(_.deltas.map(_ -> b)))
-      .groupBy(_._1).map { case (rel, owners) => rel -> owners.map(_._2).toSet }
-    val deltaScans = deltaOwners.toSeq
+      .groupBy(_._1).toSeq.map { case (rel, owners) => rel -> owners.map(_._2).toSet }
       .groupBy(_._2).toSeq
       .map { case (owners, rels) => (owners.toSeq.sorted, rels.map(_._1).sorted) }
       .sortBy(_._2.head)
-      .map { case (owners, rels) =>
-        scanPaths(spark, rels.map(rel => s"$dir/$rel"))
-          .filter(bucketCol(m.nBuckets).isin(owners.map(Integer.valueOf): _*))
-      }
-    val parts =
-      (if (basePaths.isEmpty) Nil else Seq(scanPaths(spark, basePaths))) ++ deltaScans
-    if (parts.isEmpty)
+    val rels = baseRels ++ ownerGroups.flatMap(_._2)
+    if (rels.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
-    else parts.reduce(_ unionByName _)
+    else {
+      val rows = scanPaths(spark, rels.map(rel => s"$dir/$rel"))
+      if (ownerGroups.isEmpty) rows
+      else {
+        def seqs(rs: Seq[String]): Column = col("__seq").isin(rs.map(commitSeq): _*)
+        val scoped = ownerGroups.map { case (owners, deltas) =>
+          seqs(deltas) && bucketCol(m.nBuckets).isin(owners.map(Integer.valueOf): _*)
+        }
+        rows.filter((if (baseRels.isEmpty) scoped else seqs(baseRels) +: scoped).reduce(_ || _))
+      }
+    }
   }
+
+  /** The commit seq a data dir's rows carry, from its name. */
+  private def commitSeq(rel: String): java.lang.Long =
+    rel.split('/')(1).dropWhile(_ != '_').drop(1).toLong
 
   /** LWW resolution across base+delta rows: highest commit wins (a key
     * appears at most once per commit), tombstones erase. */
@@ -242,20 +288,48 @@ object BucketedStateStore {
     }
 
   /** Seed the store from a full state DataFrame (the scan backfill, L5
-    * start): one id-sorted base file per bucket, manifest seq 0. */
-  def seed(state: DataFrame, dir: String, spec: Spec): Unit = {
-    val spark = state.sparkSession
-    val rel = "data/base_0"
-    state.select(StateStore.schemaCols.map(col): _*)
+    * start): one id-sorted base file per bucket, manifest seq 0, with
+    * exactly `spec.nBuckets` buckets (the backfill passes the count
+    * [[bucketsFor]] picked). */
+  def seed(state: DataFrame, dir: String, spec: Spec): Unit =
+    writeManifest(dir, writeBase(state, dir, 0L, spec.nBuckets))
+
+  /** One partitioned, id-sorted base write of `rows` into
+    * `data/base_<seq>` — the layout every seed, compaction and reshard
+    * produces — and the manifest whose buckets all point at it. */
+  private def writeBase(rows: DataFrame, dir: String, seq: Long, nBuckets: Int): Manifest = {
+    val rel = s"data/base_$seq"
+    rows.select(StateStore.schemaCols.map(col): _*)
       .withColumn("action", lit("upsert"))
-      .withColumn("__seq", lit(0L))
-      .withColumn("__bucket", bucketCol(spec.nBuckets))
+      .withColumn("__seq", lit(seq))
+      .withColumn("__bucket", bucketCol(nBuckets))
       .repartition(col("__bucket"))
       .sortWithinPartitions(col("__bucket"), col("id"))
       .write.partitionBy("__bucket").mode("overwrite").parquet(s"$dir/$rel")
-    val buckets = listBucketDirs(dir, rel)
-    writeManifest(dir, Manifest(spec.nBuckets, 0L,
-      buckets.map { case (b, p) => b -> BucketFiles(Some(p), Vector.empty) }))
+    Manifest(nBuckets, seq,
+      listBucketDirs(dir, rel).map { case (b, p) => b -> BucketFiles(Some(p), Vector.empty) })
+  }
+
+  /** The frame's size statistic in bytes (file bytes for a file
+    * source), or None when the plan reports Spark's default size — the
+    * value a source without statistics (an RDD frame, a connector that
+    * reports none) falls back to. */
+  def sizeStatistic(df: DataFrame): Option[BigInt] = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes >= df.sparkSession.sessionState.conf.defaultSizeInBytes) None else Some(bytes)
+  }
+
+  /** The sizing rule: `ceil(bytes / TargetBucketBytes)` buckets, clamped
+    * to `[1, spec.nBuckets]`; no statistic keeps the cap. */
+  def bucketsFor(bytes: Option[BigInt], spec: Spec): Int =
+    bucketsFor(bytes, spec, TargetBucketBytes)
+
+  /** [[bucketsFor]] against another target (specs use small ones). */
+  private[cdc] def bucketsFor(bytes: Option[BigInt], spec: Spec, target: Long): Int = bytes match {
+    case None => spec.nBuckets
+    case Some(b) =>
+      val n = (b + target - 1) / target
+      n.max(BigInt(1)).min(BigInt(spec.nBuckets)).toInt
   }
 
   /** Prior state rows for EXACTLY the batch's keys — the engine's
@@ -266,22 +340,29 @@ object BucketedStateStore {
     readManifest(dir) match {
       case None => StateStore.empty(spark)
       case Some(m) =>
-        val st = keyStats(m.nBuckets, keys)
-        priorForStats(spark, dir, m, keys, st)
+        val st = batchStats(m.nBuckets, keys)
+        priorForStats(spark, dir, m, keys.select(col("id")), st)
     }
 
-  /** One tiny aggregate over the (persisted) key set: dirty bucket ids,
-    * the id range, and the key count — everything the planner-side
-    * pruning needs, in a single job. */
-  private final case class KeyStats(dirty: Set[Int], lo: String, hi: String, n: Long)
+  /** One tiny aggregate over the batch: its row count, a bound on its
+    * distinct keys (the broadcast-cap probe), the dirty bucket ids and
+    * the id range — everything the planner-side pruning needs, in a
+    * single job. On a persisted batch this job is also the pass that
+    * materialises it. */
+  private final case class BatchStats(rows: Long, keys: Long, dirty: Set[Int], lo: String, hi: String)
 
-  private def keyStats(nBuckets: Int, keys: DataFrame): KeyStats = {
-    val row = keys.agg(
+  private def batchStats(nBuckets: Int, batch: DataFrame): BatchStats = {
+    val row = batch.agg(
+      count(lit(1)).as("n"),
+      approx_count_distinct(col("id")).as("k"),
       collect_set(bucketCol(nBuckets)).as("bs"),
       min(col("id")).as("lo"),
-      max(col("id")).as("hi"),
-      count(lit(1)).as("n")).head()
-    KeyStats(row.getSeq[Int](0).toSet, row.getString(1), row.getString(2), row.getLong(3))
+      max(col("id")).as("hi")).head()
+    val rows = row.getLong(0)
+    // the HLL estimate (5% relative standard deviation) plus a 4-sigma
+    // margin, never above the row count
+    val keys = math.min(rows, math.ceil(row.getLong(1) * 1.2).toLong)
+    BatchStats(rows, keys, row.getSeq[Int](2).toSet, row.getString(3), row.getString(4))
   }
 
   /** Above this many distinct batch keys the point-lookup stops forcing
@@ -291,19 +372,22 @@ object BucketedStateStore {
     * that oversized trigger. */
   private[graft] val BroadcastKeyLimit = 500000L
 
+  /** The lookup is a LEFT SEMI join against the batch's raw ids: a semi
+    * join never duplicates a state row however often an id repeats in
+    * the batch, so the key side needs no distinct aggregate — no shuffle
+    * before the broadcast (the fold's source semi join keys the same
+    * way). */
   private def priorForStats(
       spark: SparkSession, dir: String, m: Manifest,
-      keys: DataFrame, st: KeyStats): DataFrame = {
+      ids: DataFrame, st: BatchStats): DataFrame = {
     val paths = m.livePathsFor(dir, st.dirty)
     if (paths.isEmpty || st.lo == null) StateStore.empty(spark)
     else {
-      val keySide =
-        if (st.n <= BroadcastKeyLimit) broadcast(keys.select(col("id")).distinct())
-        else keys.select(col("id")).distinct()
+      val keySide = if (st.keys <= BroadcastKeyLimit) broadcast(ids) else ids
       resolve(
         scanBuckets(spark, dir, m, st.dirty)
           .filter(col("id") >= lit(st.lo) && col("id") <= lit(st.hi))
-          .join(keySide, Seq("id")))
+          .join(keySide, Seq("id"), "left_semi"))
     }
   }
 
@@ -311,9 +395,10 @@ object BucketedStateStore {
     * checkpoint dir); this detects a violated contract rather than
     * silently orphaning one writer's commit: the manifest pointer is
     * re-read immediately before each swap and the commit aborts if
-    * another writer advanced it since our manifest was loaded. */
+    * another writer advanced it since our manifest was loaded. Only the
+    * pointer file is read — the seq is all the check compares. */
   private def checkPointerUnmoved(dir: String, expected: Long): Unit = {
-    val cur = readManifest(dir).map(_.seq).getOrElse(-1L)
+    val cur = if (StateIO.exists(pointer(dir))) StateIO.readString(pointer(dir)).trim.toLong else -1L
     if (cur != expected)
       throw new java.util.ConcurrentModificationException(
         s"concurrent writer on bucketed state at $dir: manifest seq moved " +
@@ -328,9 +413,17 @@ object BucketedStateStore {
     * `preSwap` hook exists for the spec to interpose exactly that.  */
   def commitDelta(
       applied: DataFrame, dir: String, spec: Spec, dirty: Set[Int],
-      preSwap: () => Unit = () => ()): Long = {
+      preSwap: () => Unit = () => ()): Long =
+    commitOn(readManifest(dir).getOrElse(Manifest(spec.nBuckets, -1L, Map.empty)),
+      applied, dir, spec, dirty, TargetBucketBytes, preSwap)
+
+  /** [[commitDelta]] against a manifest the caller already loaded (the
+    * per-trigger apply reads it once for the lookup and the commit),
+    * growing the bucket count past `target` bytes per base. */
+  private def commitOn(
+      m: Manifest, applied: DataFrame, dir: String, spec: Spec, dirty: Set[Int],
+      target: Long, preSwap: () => Unit = () => ()): Long = {
     val spark = applied.sparkSession
-    val m = readManifest(dir).getOrElse(Manifest(spec.nBuckets, -1L, Map.empty))
     val seq = m.seq + 1
     val rel = s"data/delta_$seq"
     applied
@@ -350,34 +443,45 @@ object BucketedStateStore {
     // already-compacted bucket can never bake into the new base.
     val toCompact = next.buckets.filter(_._2.deltas.size >= spec.compactThreshold).keys.toSeq.sorted
     if (toCompact.nonEmpty) {
-      val cseq = next.seq + 1
-      val crel = s"data/base_$cseq"
-      resolve(scanBuckets(spark, dir, next, toCompact))
-        .withColumn("action", lit("upsert"))
-        .withColumn("__seq", lit(cseq))
-        .withColumn("__bucket", bucketCol(next.nBuckets))
-        .repartition(col("__bucket"))
-        .sortWithinPartitions(col("__bucket"), col("id"))
-        .write.partitionBy("__bucket").mode("overwrite").parquet(s"$dir/$crel")
-      val compacted = listBucketDirs(dir, crel)
+      val compacted = writeBase(
+        resolve(scanBuckets(spark, dir, next, toCompact)), dir, next.seq + 1, next.nBuckets)
       val rebased = toCompact.foldLeft(next.buckets) { (acc, b) =>
-        compacted.get(b) match {
-          case Some(p) => acc.updated(b, BucketFiles(Some(p), Vector.empty))
+        compacted.buckets.get(b) match {
+          case Some(f) => acc.updated(b, f)
           case None    => acc - b // bucket fully deleted
         }
       }
-      next = Manifest(next.nBuckets, cseq, rebased)
       checkPointerUnmoved(dir, seq) // our own delta swap must still be current
+      next = Manifest(next.nBuckets, compacted.seq, rebased)
       writeManifest(dir, next)
+      // growth: a compacted base past the target doubles the bucket
+      // count, up to the cap — the sizing rule applied as the state grows.
+      // The vacuum below keeps `retainManifests` of history across it:
+      // each manifest carries its own count, and readAt scopes with it.
+      val outgrown = next.nBuckets < spec.nBuckets && compacted.buckets.values
+        .exists(_.base.exists(p => dataBytes(s"$dir/$p") > target))
+      if (outgrown) next = rebucket(spark, dir, next, math.min(2 * next.nBuckets, spec.nBuckets))
     }
     vacuum(dir, spec.retainManifests)
     next.seq
   }
 
+  /** Bytes of the data files directly under `path` (a base leaf dir). */
+  private def dataBytes(path: String): Long =
+    StateIO.list(path).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith(".") && !n.startsWith("_")
+    }.map(_.getLen).sum
+
   /** The full incremental micro-batch apply: point-lookup prior state
     * for the batch's keys, run the fused compact+dispatch+LWW fold
     * (which itself semi-joins the source snapshot down to the batch's
-    * keys), and commit the outcomes as one shared delta. */
+    * keys), and commit the outcomes as one shared delta. The manifest is
+    * read once, and one aggregate over `events` yields its row count,
+    * dirty buckets and id range; callers that run several actions over
+    * the batch persist it first (the tail does), so that aggregate is
+    * the pass that materialises it. Returns the committed manifest seq,
+    * or None for an empty batch, which commits nothing. */
   def applyBatch(
       events: Dataset[OplogRow],
       task: TaskSpec,
@@ -390,50 +494,54 @@ object BucketedStateStore {
       // tail's bulk-body emitter (L2). The frame is persisted around
       // the commit when a consumer is present, so the fold runs once.
       onOutcomes: Option[DataFrame => Unit] = None,
-  ): Long = {
+  ): Option[Long] =
+    applySized(events, task, dir, spec, source, dropped, onOutcomes, TargetBucketBytes)
+
+  /** [[applyBatch]] with the growth step at another per-bucket target
+    * (specs use a tiny one to exercise growth on tiny state). */
+  private[cdc] def applySized(
+      events: Dataset[OplogRow], task: TaskSpec, dir: String, spec: Spec,
+      source: Option[DataFrame], dropped: Option[org.apache.spark.util.LongAccumulator],
+      onOutcomes: Option[DataFrame => Unit], target: Long): Option[Long] = {
     val spark = events.sparkSession
-    val keys = events.select(col("id")).distinct().persist()
-    try {
-      val m = readManifest(dir)
-      val n = m.map(_.nBuckets).getOrElse(spec.nBuckets)
-      val st = keyStats(n, keys)
-      val prior = m.map(priorForStats(spark, dir, _, keys, st))
-        .getOrElse(StateStore.empty(spark))
+    val m = readManifest(dir).getOrElse(Manifest(spec.nBuckets, -1L, Map.empty))
+    val st = batchStats(m.nBuckets, events.toDF)
+    if (st.rows == 0) None
+    else {
+      val prior = priorForStats(spark, dir, m, events.select(col("id")), st)
       val applied0 = BatchApplier.applyOplogBatchKeepDeletes(
-        events, prior, task, source, dropped, batchKeyCount = Some(st.n))
+        events, prior, task, source, dropped, batchKeyCount = Some(st.keys))
       val applied = if (onOutcomes.isDefined) applied0.persist() else applied0
       try {
-        val r = commitDelta(applied, dir, spec, st.dirty)
+        val r = commitOn(m, applied, dir, spec, st.dirty, target)
         onOutcomes.foreach(f => f(applied))
-        r
+        Some(r)
       } finally if (onOutcomes.isDefined) { applied.unpersist(); () }
-    } finally { keys.unpersist(); () }
+    }
   }
 
-  /** Re-bucket the store to `newNBuckets` — the maintenance operation a
-    * growing deployment runs when buckets outgrow their target size
-    * (the sizing rule in the class doc: nBuckets ≈ state / 128 MB).
-    * One full read → one partitioned rewrite → one manifest swap; the
-    * store stays readable throughout (readers resolve the old manifest
-    * until the pointer moves), and the next vacuum reclaims the old
-    * layout. Run it BETWEEN micro-batches (same single-writer contract
-    * as commits themselves). */
+  /** Re-bucket the store to `newNBuckets` — the maintenance operation
+    * for a count the sizing rule (class doc) does not reach on its own,
+    * e.g. past `Spec.nBuckets`; a commit's compaction takes the same
+    * step by itself while the count is under the cap. One full read →
+    * one partitioned rewrite → one manifest swap; the store stays
+    * readable throughout (readers resolve the old manifest until the
+    * pointer moves). Unlike a growth step, which keeps the retained
+    * history, an explicit reshard then drops every older manifest and
+    * the old layout's files. Run it BETWEEN micro-batches (same
+    * single-writer contract as commits themselves). */
   def reshard(spark: SparkSession, dir: String, newNBuckets: Int): Unit = {
     val m = readManifest(dir).getOrElse(
       throw new IllegalStateException(s"no bucketed state at $dir to reshard"))
-    val seq = m.seq + 1
-    val rel = s"data/base_$seq"
-    read(spark, dir)
-      .withColumn("action", lit("upsert"))
-      .withColumn("__seq", lit(seq))
-      .withColumn("__bucket", bucketCol(newNBuckets))
-      .repartition(col("__bucket"))
-      .sortWithinPartitions(col("__bucket"), col("id"))
-      .write.partitionBy("__bucket").mode("overwrite").parquet(s"$dir/$rel")
-    val buckets = listBucketDirs(dir, rel)
-    writeManifest(dir, Manifest(newNBuckets, seq,
-      buckets.map { case (b, p) => b -> BucketFiles(Some(p), Vector.empty) }))
-    vacuum(dir, 1) // the old bucketing is not time-travel-compatible
+    rebucket(spark, dir, m, newNBuckets)
+    vacuum(dir, 1) // an explicit reshard reclaims the old layout's disk at once
+  }
+
+  private def rebucket(spark: SparkSession, dir: String, m: Manifest, newNBuckets: Int): Manifest = {
+    val next = writeBase(readFrom(spark, dir, Some(m)), dir, m.seq + 1, newNBuckets)
+    checkPointerUnmoved(dir, m.seq)
+    writeManifest(dir, next)
+    next
   }
 
   /** Keep the newest `retain` manifests; delete older manifest files

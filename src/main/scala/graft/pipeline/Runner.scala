@@ -130,9 +130,10 @@ object Runner {
     // optional file-backed load leg (reference ships bulk bodies over
     // HTTP; a harness deployment declares `elasticsearch.options.bulkDir`
     // and gets the same bodies as per-batch bulk files). A relative dir
-    // resolves under baseDir, next to state and checkpoints.
+    // resolves under baseDir, next to state and checkpoints; an absolute
+    // path or a URI (`hdfs://nn/bulk`, `file:/bulk`) is taken as given.
     val bulkRoot = config.esSinkOptions.get("bulkDir").map { d =>
-      if (new java.io.File(d).isAbsolute) d else s"$baseDir/$d"
+      if (new org.apache.hadoop.fs.Path(d).isAbsolute) d else s"$baseDir/$d"
     }
     // optional LIVE leg on top of the file leg: `bulkEndpoint` POSTs
     // each committed bulk file to an ES-compatible `_bulk` URL with

@@ -39,7 +39,11 @@ object ScanJob {
     * start; reference src/index.ts:27-32). Returns the seeded state.
     * With `buckets` set, seeds the incremental [[BucketedStateStore]]
     * (one id-sorted base file per bucket) instead of the legacy
-    * versioned layout. */
+    * versioned layout. The bucket count comes from the snapshot:
+    * [[BucketedStateStore.bucketsFor]] its size statistic, with
+    * `spec.nBuckets` as the cap (and the count when `source` reports no
+    * statistic). The seeded state's own plan is no guide — it derives
+    * from an RDD frame, which reports Spark's default size. */
   def backfill(
       source: DataFrame,
       task: TaskSpec,
@@ -55,7 +59,9 @@ object ScanJob {
     val irs = run(source, task)
     val state = StateStore.applyIRs(StateStore.empty(spark), irs)
     buckets match {
-      case Some(spec) => BucketedStateStore.seed(state, stateDir, spec)
+      case Some(spec) =>
+        val n = BucketedStateStore.bucketsFor(BucketedStateStore.sizeStatistic(source), spec)
+        BucketedStateStore.seed(state, stateDir, spec.copy(nBuckets = n))
       case None       => StateStore.write(state, stateDir)
     }
     val seeded = StateStore.read(spark, stateDir)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.cdc.{BatchApplier, BucketedStateStore, Compactor, OplogRow, StateStore}
+import graft.cdc.{BatchApplier, BucketedStateStore, Compactor, OplogRow, StateIO, StateStore}
 import graft.model.{CheckpointHooks, TaskSpec}
 
 /** The streaming tail phase (reference src/processor.ts:332-396,
@@ -72,7 +72,8 @@ object TailQuery {
     * in EXECUTOR tasks — one task per committed part file — so delivery
     * bandwidth scales with the write parallelism instead of serializing
     * through the driver (the reference's single client is its 10k docs/s
-    * ceiling); the driver only lists part-file NAMES. */
+    * ceiling); the driver only lists part-file NAMES. `dir` may be any
+    * URI the Hadoop layer resolves (`file:`, `hdfs:`, a plain path). */
   final case class BulkSpec(dir: String, index: String, esType: String,
       endpoint: Option[String] = None,
       httpPolicy: graft.sink.BulkHttp.Policy = graft.sink.BulkHttp.Policy())
@@ -98,10 +99,13 @@ object TailQuery {
   private[pipeline] def deliverBulkDir(spark: SparkSession, batchDir: String,
       b: BulkSpec): Unit =
     b.endpoint.foreach { ep =>
-      val parts = Option(new java.io.File(batchDir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-")).map(_.getPath).sorted.toSeq
+      // listed and read through the Hadoop layer, so a `file:` or
+      // `hdfs:` batch dir delivers like a plain local one
+      val parts = StateIO.list(batchDir).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).map(_.toString).sorted
       if (parts.nonEmpty) {
         val policy = b.httpPolicy
+        val conf = new graft.source.v2.SerializableHadoopConf(StateIO.hadoopConf)
         import spark.implicits._
         spark.createDataset(parts)
           .repartition(parts.size) // one task per file
@@ -111,7 +115,7 @@ object TailQuery {
               if (tc == null) "driver"
               else s"task-${tc.partitionId()}-${tc.taskAttemptId()}"
             graft.sink.BulkHttp.deliverFile(
-              path, java.net.URI.create(ep), policy, tag = tag)
+              path, java.net.URI.create(ep), policy, tag = tag, conf = conf.value)
             ()
           }
       }
@@ -174,23 +178,25 @@ object TailQuery {
         // observed metrics exact (each uncached action would re-run the
         // CollectMetrics node and inflate the counters — an isEmpty
         // probe alone adds its scanned row) and reads the micro-batch
-        // files once instead of twice.
+        // files once instead of twice. On the bucketed path that pass
+        // is the store's batch-stats aggregate, which also yields the
+        // row count; the legacy path counts.
         batch.persist()
         try {
           // an empty trigger applies nothing: no state rewrite, no
           // hook — the reference likewise only checkpoints batches
           // that loaded IRs (src/processor.ts:382-390)
-          val batchRows = batch.count()
-          if (batchRows > 0) {
-            effectiveBuckets match {
-              case Some(spec) =>
-                // incremental: touch only the batch's keys and buckets;
-                // the bulk load leg taps the same outcomes the delta
-                // commit writes — no second fold
-                BucketedStateStore.applyBatch(
-                  batch.as[OplogRow], task, stateDir, spec, source,
-                  onOutcomes = bulk.map(b => (o: DataFrame) => writeBulk(o, b, batchId)))
-              case None =>
+          val loaded = effectiveBuckets match {
+            case Some(spec) =>
+              // incremental: touch only the batch's keys and buckets;
+              // the bulk load leg taps the same outcomes the delta
+              // commit writes — no second fold
+              BucketedStateStore.applyBatch(
+                batch.as[OplogRow], task, stateDir, spec, source,
+                onOutcomes = bulk.map(b => (o: DataFrame) => writeBulk(o, b, batchId))).isDefined
+            case None =>
+              val batchRows = batch.count()
+              if (batchRows > 0) {
                 val st = StateStore.read(spark, stateDir)
                 // fused compact+dispatch+merge: one co-grouped shuffle per
                 // batch. The row count upper-bounds the distinct-key count,
@@ -208,13 +214,14 @@ object TailQuery {
                     stateDir)
                   bulk.foreach(b => writeBulk(outcomes, b, batchId))
                 } finally if (bulk.isDefined) { outcomes.unpersist(); () }
-            }
-            // mirror tail progress to user persistence (L4 side channel);
-            // failures never kill the batch — the authoritative
-            // checkpoint is Spark's
-            if (taskName.nonEmpty)
-              CheckpointHooks.save(hooks, taskName, CheckpointHooks.tailNow())
+              }
+              batchRows > 0
           }
+          // mirror tail progress to user persistence (L4 side channel);
+          // failures never kill the batch — the authoritative
+          // checkpoint is Spark's
+          if (loaded && taskName.nonEmpty)
+            CheckpointHooks.save(hooks, taskName, CheckpointHooks.tailNow())
         } catch {
           case scala.util.control.NonFatal(e) =>
             failurePolicy match {

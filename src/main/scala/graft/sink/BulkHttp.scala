@@ -181,11 +181,15 @@ object BulkHttp {
     report
   }
 
-  /** Deliver one committed sink part file (plain or gzip). */
+  /** Deliver one committed sink part file (plain or gzip). `path` is
+    * opened through the Hadoop layer under `conf`, so a plain path and
+    * any URI it resolves (`file:`, `hdfs:`) read alike. */
   def deliverFile(path: String, uri: URI, policy: Policy = Policy(),
       client: HttpClient = HttpClient.newHttpClient(),
-      tag: String = ""): BulkReport = {
-    val raw: java.io.InputStream = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))
+      tag: String = "",
+      conf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration()): BulkReport = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val raw: java.io.InputStream = graft.source.v2.FsIO.rawFs(p, conf).open(p)
     val in = if (path.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw) else raw
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toIndexedSeq

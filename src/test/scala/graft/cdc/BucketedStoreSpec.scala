@@ -57,7 +57,7 @@ class BucketedStoreSpec extends AnyFunSuite {
     var legacyWant = Vector.empty[(Int, Map[String, (String, Long)])]
     batches.foreach { b =>
       val ds = spark.createDataset(b)
-      val seq = BucketedStateStore.applyBatch(ds, task, bdir, ttSpec, Some(source))
+      val seq = BucketedStateStore.applyBatch(ds, task, bdir, ttSpec, Some(source)).get
       bucketedWant :+= (seq, readMap(bdir))
       val v = StateStore.write(
         BatchApplier.applyOplogBatch(ds, StateStore.read(spark, ldir), task, Some(source)), ldir)
@@ -142,21 +142,31 @@ class BucketedStoreSpec extends AnyFunSuite {
       .map(i => (s"k$i", s"""{"_id":"k$i","value":$i.0}""", null: String, 1L))
       .toDF("id", "doc", "parent", "ts")
     BucketedStateStore.seed(seedState, dir, spec)
-    val keys = Seq("k1", "k9", "k17").toDF("id")
-    val prior = BucketedStateStore.priorFor(spark, dir, keys)
-    val plan = prior.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"keys must broadcast:\n${plan.take(2000)}")
-    // the parquet state scan (the join's streamed branch, printed
-    // between the join node and the BroadcastExchange of the build
-    // side) must feed the join directly — no hash repartition. The key
-    // range must also reach the scan as pushed parquet filters.
-    val joinIdx = plan.indexOf("BroadcastHashJoin")
-    val stateSide = plan.substring(joinIdx, plan.indexOf("BroadcastExchange", joinIdx))
-    assert(!stateSide.contains("Exchange hashpartitioning"),
-      s"state scan must reach the join unshuffled:\n${stateSide.take(2500)}")
-    assert(stateSide.contains("GreaterThanOrEqual(id,") && stateSide.contains("LessThanOrEqual(id,"),
-      s"key range must be pushed to parquet:\n${stateSide.take(2500)}")
-    assert(prior.collect().map(_.getAs[String]("id")).toSet === Set("k1", "k9", "k17"))
+    val few = Seq("k1", "k9", "k17")
+    // the same three keys repeated past the broadcast cap: the cap
+    // counts distinct keys, not rows
+    val repeated = spark.range(BucketedStateStore.BroadcastKeyLimit + 1)
+      .select(element_at(typedLit(few), (col("id") % 3 + 1).cast("int")).as("id"))
+    // size-based broadcasting off, so only the lookup's own hint can
+    // broadcast (tiny frames would auto-broadcast without it)
+    val autoBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try Seq(few.toDF("id"), repeated).foreach { keys =>
+      val prior = BucketedStateStore.priorFor(spark, dir, keys)
+      val plan = prior.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"), s"keys must broadcast:\n${plan.take(2000)}")
+      // the parquet state scan (the join's streamed branch, printed
+      // between the join node and the BroadcastExchange of the build
+      // side) must feed the join directly — no hash repartition. The key
+      // range must also reach the scan as pushed parquet filters.
+      val joinIdx = plan.indexOf("BroadcastHashJoin")
+      val stateSide = plan.substring(joinIdx, plan.indexOf("BroadcastExchange", joinIdx))
+      assert(!stateSide.contains("Exchange hashpartitioning"),
+        s"state scan must reach the join unshuffled:\n${stateSide.take(2500)}")
+      assert(stateSide.contains("GreaterThanOrEqual(id,") && stateSide.contains("LessThanOrEqual(id,"),
+        s"key range must be pushed to parquet:\n${stateSide.take(2500)}")
+      assert(prior.collect().map(_.getAs[String]("id")).toSet === few.toSet)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoBroadcast)
   }
 
   test("delta chains compact past the threshold and tombstones are physically dropped") {

@@ -185,4 +185,56 @@ class TailQuerySpec extends AnyFunSuite {
     // was consciously skipped with its batch — offsets committed past it
     assert(ids === Set("k1", "k3"))
   }
+
+  test("bucketed tail with the bulk leg: cached blocks and live data dirs stay bounded over 12 triggers") {
+    // Long-running tails must not leak: every trigger persists its batch
+    // and (for the bulk leg) its outcomes, and each commit writes a new
+    // data dir. After every trigger the cached RDD blocks must be back
+    // to their pre-trigger count, and vacuum + compaction must hold the
+    // live data dirs under a bound that does not grow with the trigger
+    // count. (Broadcast pieces are reclaimed by the context cleaner on
+    // GC, not per trigger, so only RDD blocks are counted.)
+    import OplogRow.encoder
+    val base = Files.createTempDirectory("tail-bounded").toString
+    val inDir = s"$base/in"
+    Files.createDirectories(java.nio.file.Paths.get(inDir))
+    val spec = graft.cdc.BucketedStateStore.Spec(nBuckets = 2, compactThreshold = 3, retainManifests = 2)
+    val q = TailQuery.start(
+      spark.readStream.schema(oplogSchema).option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true").parquet(inDir),
+      task, ns = "db.c", fromTs = 0L,
+      stateDir = s"$base/state", checkpointDir = s"$base/ckpt",
+      buckets = Some(spec), bulk = Some(TailQuery.BulkSpec(s"$base/bulk", "idx", "_doc")))
+    val blockManager = org.apache.spark.SparkEnv.get.blockManager.master
+    def rddBlocks(): Int = blockManager.getMatchingBlockIds(_.isRDD, askStorageEndpoints = true).size
+    def settled(want: Int): Int = { // unpersist is asynchronous
+      val deadline = System.currentTimeMillis() + 10000
+      var n = rddBlocks()
+      while (n != want && System.currentTimeMillis() < deadline) { Thread.sleep(50); n = rddBlocks() }
+      n
+    }
+    def dataDirs(): Int = graft.cdc.StateIO.list(s"$base/state/data").count(_.isDirectory)
+    // the newest manifest's chains hold < compactThreshold deltas; each
+    // older retained manifest adds at most one delta and one base dir
+    val dirBound = spec.compactThreshold + 2 * spec.retainManifests
+    val triggers = 12
+    try {
+      (1 to triggers).foreach { t =>
+        val pre = rddBlocks()
+        spark.createDataset((0 until 8).map { i =>
+          val id = s"k${(t * 3 + i) % 10}"
+          if (i == 7 && t % 4 == 0) OplogRow(BsonTs(t, i).toLong, "d", "db.c", id, s"""{"_id":"$id"}""")
+          else OplogRow(BsonTs(t, i).toLong, "i", "db.c", id, s"""{"_id":"$id","value":$t.$i}""")
+        }).coalesce(1).write.parquet(f"$inDir/b$t%03d")
+        q.processAllAvailable()
+        assert(settled(pre) === pre, s"trigger $t: cached blocks must return to $pre")
+        assert(spark.sharedState.cacheManager.isEmpty, s"trigger $t: no cached plan may stay registered")
+        assert(dataDirs() <= dirBound, s"trigger $t: ${dataDirs()} live data dirs > $dirBound")
+      }
+    } finally q.stop()
+    assert(graft.cdc.BucketedStateStore.readManifest(s"$base/state").get.seq >= triggers,
+      "every trigger committed")
+    val bulkBatches = graft.cdc.StateIO.list(s"$base/bulk").count(_.getPath.getName.startsWith("batch-"))
+    assert(bulkBatches === triggers, "the bulk leg wrote one dir per trigger")
+  }
 }
