@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.cdc.{Compactor, Dispatcher, OplogRow, StateStore}
+import graft.cdc.{OplogRow, StateStore}
 import graft.model.TaskSpec
-import graft.pipeline.ScanJob
 import graft.source.EventsOplog
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */

@@ -18,24 +18,24 @@ final case class ApplyRow(
     parent: String,
     fromMigrate: Boolean)
 
-/** The fused micro-batch apply: compact (C2) + dispatch (C1, S5–S7
-  * lookups) + LWW state merge (L1/O9/O10) as ONE co-grouped pass.
+/** The CDC apply: compact (C2) + dispatch (C1, S5–S7 lookups) + LWW
+  * state merge (L1/O9/O10) as ONE co-grouped pass — the only place the
+  * engine folds oplog events into state. The tail applies each
+  * micro-batch through it, and the scan backfill seeds state by folding
+  * the snapshot as ts-0 inserts onto empty state.
   *
-  * The modular operators ([[Compactor]], [[Dispatcher]],
-  * [[StateStore.applyIRs]]) pay three key-hash shuffles per micro-batch
-  * (compaction, state join, merge window) — all on the SAME key. Fusing
-  * them unions state ∪ source ∪ events with a kind tag and groups once:
-  * the whole batch apply is a single hash shuffle + one linear pass per
-  * key, with O(events-per-key) group memory. At 100 TB this is the
-  * difference between 3x and 1x network pass per micro-batch; with
-  * bucketed/partitioned state storage the state side's shuffle drops
-  * out entirely (co-located read).
+  * It unions state ∪ source ∪ events with a kind tag and groups once,
+  * rather than running compaction, the state join and the merge window
+  * as three operators that each shuffle on the SAME key: the whole
+  * batch apply is a single hash shuffle + one linear pass per key, with
+  * O(events-per-key) group memory. The bucketed store hands in only
+  * the prior rows of the batch's keys, so the shuffle stays O(batch)
+  * whatever the state's size.
   *
   * Semantics are inherited verbatim from the pure core: the per-key fold
   * is `mergeOplogs` -> `dispatch` -> ts-guarded LWW against the existing
-  * state doc (IR wins ties — idempotent replays, O9). The equivalence
-  * with the modular path is pinned by CdcPipelineSpec's model-fold test
-  * running both.
+  * state doc (IR wins ties — idempotent replays, O9). CdcPipelineSpec's
+  * model-fold test pins it against a sequential pure-core fold.
   */
 object BatchApplier {
 

@@ -46,11 +46,11 @@ import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
   * files — the engine-owned analog of the reference's batched ES
   * `mget` (S6, reference src/elasticsearch.ts:30-63). The state side
   * streams through the join co-located with its files: no exchange
-  * ever materializes the state (pinned by BucketedStateSpec's plan
-  * assertion). A `min(id)..max(id)` range predicate on the scan is
-  * pushed to parquet, so with id-sorted bases (written sorted) and a
-  * key-local batch, row-group min/max skipping prunes below bucket
-  * granularity.
+  * ever materializes the state (pinned by BucketedStoreSpec's
+  * prior-key lookup plan assertion). A `min(id)..max(id)` range
+  * predicate on the scan is pushed to parquet, so with id-sorted bases
+  * (written sorted) and a key-local batch, row-group min/max skipping
+  * prunes below bucket granularity.
   *
   * Sizing: `nBuckets ≈ state_bytes / TargetBucketBytes` (16 MB),
   * clamped to `[1, Spec.nBuckets]`. The scan backfill

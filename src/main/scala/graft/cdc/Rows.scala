@@ -30,35 +30,4 @@ final case class OplogRow(
 
 object OplogRow {
   implicit val encoder: Encoder[OplogRow] = Encoders.product[OplogRow]
-
-  def fromCore(o: Oplog): OplogRow =
-    OplogRow(o.ts.toLong, o.op, o.ns, o.docId.getOrElse(""), o.o.render, o.fromMigrate)
-}
-
-/** Spark row shape of the transform output IR (reference
-  * src/types.ts:46-63): `data` is the mapped sink document as JSON
-  * (null for deletes), `parent` the rendered parent-routing value
-  * (null when absent).
-  */
-final case class IRRow(
-    action: String, // "upsert" | "delete"
-    id: String,
-    data: String,
-    parent: String,
-    ts: Long,
-)
-
-object IRRow {
-  implicit val encoder: Encoder[IRRow] = Encoders.product[IRRow]
-
-  def fromCore(ir: IR): IRRow = IRRow(
-    ir.action,
-    ir.id,
-    ir.data.map(_.render).orNull,
-    ir.parent.map {
-      case DStr(s) => s
-      case other   => other.render
-    }.orNull,
-    ir.timestamp,
-  )
 }

@@ -1,9 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.model.{DObj, DStr, Json}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Engine-owned sink state — the architectural replacement for the
   * reference's sink read-back (S6/S7, reference src/elasticsearch.ts:30-148)
@@ -13,15 +10,15 @@ import graft.model.{DObj, DStr, Json}
   * State schema: `(id string, doc string, parent string, ts long)` where
   * `doc` is the sink-shaped JSON document including `_id`.
   *
-  * [[applyIRs]] is a MERGE: last-writer-wins by `ts` with upsert/delete
-  * semantics — replay-safe (O9: the reference re-reads a 10 s overlap on
-  * restart and relies on idempotent upserts; here the ts guard makes
-  * replays exact no-ops). Expressed relationally (union + window) so
-  * Catalyst plans a single shuffle on `id`. The incremental form of the
-  * same MERGE — touching only the batch's buckets, the way a
+  * The store holds state; [[BatchApplier.applyOplogBatch]] computes it.
+  * Its LWW merge (last-writer-wins by `ts` with upsert/delete semantics,
+  * the batch winning ties) is replay-safe: O9, the reference re-reads a
+  * 10 s overlap on restart and relies on idempotent upserts; here the ts
+  * guard makes replays exact no-ops. This versioned backend rewrites the
+  * whole applied state per commit ([[write]]); the incremental form of
+  * the same MERGE — touching only the batch's buckets, the way a
   * Delta/Iceberg `MERGE INTO` would inside `foreachBatch` — is
-  * implemented by [[BucketedStateStore.applyBatch]], the config-driven
-  * tail's default.
+  * [[BucketedStateStore.applyBatch]], the config-driven tail's default.
   *
   * Persistence is versioned parquet directories (`v_0, v_1, …` + a
   * VERSION pointer file): plain parquet cannot be overwritten while being
@@ -42,33 +39,6 @@ object StateStore {
         StructField("parent", StringType),
         StructField("ts", LongType),
       )))
-  }
-
-  /** MERGE the IR batch into the state: per id keep the latest (ts) among
-    * {existing state row, IR rows}; IR wins ts ties (idempotent replay of
-    * the same event re-applies the same value); deletes remove the key.
-    */
-  def applyIRs(state: DataFrame, irs: Dataset[IRRow]): DataFrame = {
-    val irDf = irs.toDF()
-      .withColumn("doc", sinkDocUdf(col("id"), col("data")))
-      .select(col("id"), col("doc"), col("parent"), col("ts"),
-        col("action"), lit(1).as("__prio"))
-    val stDf = state.select(col("id"), col("doc"), col("parent"), col("ts"),
-      lit("upsert").as("action"), lit(0).as("__prio"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("ts").desc, col("__prio").desc)
-    stDf.union(irDf)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("action") =!= "delete")
-      .select(schemaCols.map(col): _*)
-  }
-
-  /** Sink doc = `{_id: id} ++ data` — what the reference's ES `index` op
-    * materializes (`_id` metadata + `_source` data,
-    * reference src/processor.ts:233-241, src/elasticsearch.ts:150-157). */
-  private val sinkDocUdf = udf { (id: String, data: String) =>
-    if (data == null) null
-    else DObj(("_id" -> DStr(id)) +: Json.parseObj(data).fields.filterNot(_._1 == "_id")).render
   }
 
   // ---- versioned parquet persistence ----

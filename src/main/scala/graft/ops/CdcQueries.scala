@@ -44,7 +44,8 @@ object CdcQueries {
 
   // ---------------------------------------------------------------
   // C2's relational special case: last-writer-wins state per key
-  // (row_number over ts desc = 1), the `compactLww` twin.
+  // (row_number over ts desc = 1), valid when events are full
+  // replacements (no `$set` folding).
   private def lwwState(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("sec").desc, col("event_id").desc)
     ev(spark, dir)

@@ -1,42 +1,43 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.cdc.{BucketedStateStore, IRRow, StateStore}
-import graft.core.Transformer
-import graft.model.{Json, TaskSpec}
+import graft.cdc.{BatchApplier, BucketedStateStore, OplogRow, StateStore}
+import graft.model.TaskSpec
 
 /** The batch scan phase (reference src/processor.ts:299-330, SURVEY.md
-  * §3.2): full collection backfill with resume predicate and mapped
-  * projection, producing upsert IRs.
+  * §3.2): full collection backfill, seeding the engine-owned state
+  * through the same per-key fold the tail runs.
   *
   * The resume predicate `id >= checkpoint` (P2, reference
-  * src/mongodb.ts:35-39) and the projection (P1) are plain
-  * filter/select, so Catalyst pushes both into the source scan
+  * src/mongodb.ts:35-39) is applied by the caller ([[Runner.fromConfig]])
+  * as a plain filter, so Catalyst pushes it into the source scan
   * (parquet min/max skipping here; DSv2 pushdown on a real connector).
   * Checkpointing per micro-batch is replaced by Spark's per-partition
   * task retry — a failed partition re-runs, and the idempotent sink
-  * merge (StateStore LWW) absorbs replays, the same correctness
-  * contract as the reference's idempotent bulk `index` (O10).
+  * merge (LWW) absorbs replays, the same correctness contract as the
+  * reference's idempotent bulk `index` (O10).
   */
 object ScanJob {
 
-  /** Dynamic-document path: `source` has columns (id string, doc string)
-    * where doc is source-shaped JSON. */
-  def run(source: DataFrame, task: TaskSpec, resumeFromId: Option[String] = None): Dataset[IRRow] = {
-    val resumed = resumeFromId match {
-      case Some(ckpt) => source.filter(col("id") >= lit(ckpt)) // P2: pushed down
-      case None       => source
-    }
-    implicit val enc = IRRow.encoder
-    resumed.select(col("id"), col("doc")).as[(String, String)](Encoders.product[(String, String)])
-      .flatMap { case (_, doc) =>
-        Transformer.transformer(task, "upsert", Json.parseObj(doc)).map(IRRow.fromCore)
-      }
+  /** The state a snapshot seeds: each (id, doc) row, doc source-shaped
+    * JSON, becomes an insert at ts 0, and the batch is folded by
+    * [[BatchApplier.applyOplogBatch]] onto empty state. That gives the
+    * mapped projection (T1; P5 drops a doc with no mapped field), one
+    * row per id and `{_id} ++ data` as the sink doc. A doc whose `_id`
+    * is neither a string nor an integer is dropped, as the tail drops
+    * such inserts. */
+  def snapshotState(source: DataFrame, task: TaskSpec): DataFrame = {
+    val inserts = source.select(
+      lit(0L).as("ts"), lit("i").as("op"), lit("scan").as("ns"),
+      col("id"), col("doc"), lit(false).as("fromMigrate")).as[OplogRow]
+    BatchApplier.applyOplogBatch(inserts, StateStore.empty(source.sparkSession), task)
   }
 
-  /** Backfill: scan -> IRs -> seed the state store (phase transition L5
-    * start; reference src/index.ts:27-32). Returns the seeded state.
+  /** Backfill: snapshot -> [[snapshotState]] -> seed the state store
+    * (phase transition L5 start; reference src/index.ts:27-32). Returns
+    * the seeded state.
+    *
     * With `buckets` set, seeds the incremental [[BucketedStateStore]]
     * (one id-sorted base file per bucket) instead of the legacy
     * versioned layout. The bucket count comes from the snapshot:
@@ -56,8 +57,7 @@ object ScanJob {
       bulk: Option[TailQuery.BulkSpec] = None,
   ): DataFrame = {
     val spark = source.sparkSession
-    val irs = run(source, task)
-    val state = StateStore.applyIRs(StateStore.empty(spark), irs)
+    val state = snapshotState(source, task)
     buckets match {
       case Some(spec) =>
         val n = BucketedStateStore.bucketsFor(BucketedStateStore.sizeStatistic(source), spec)
@@ -66,7 +66,6 @@ object ScanJob {
     }
     val seeded = StateStore.read(spark, stateDir)
     bulk.foreach { b =>
-      import org.apache.spark.sql.functions.{col, lit}
       seeded
         .select(lit("upsert").as("action"), col("id"), col("doc").as("data"),
           col("parent"), col("ts"))

@@ -2,15 +2,15 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.cdc.{BatchApplier, BucketedStateStore, Compactor, OplogRow, StateIO, StateStore}
+import graft.cdc.{BatchApplier, BucketedStateStore, OplogRow, StateIO, StateStore}
 import graft.model.{CheckpointHooks, TaskSpec}
 
 /** The streaming tail phase (reference src/processor.ts:332-396,
   * SURVEY.md §3.3) on Structured Streaming:
   *
   *   source stream -> P3 filters -> trigger micro-batch ->
-  *   foreachBatch { compact (C2) -> dispatch (C1, state join) ->
-  *                  MERGE into state (L1/O10) }
+  *   foreachBatch { compact (C2) + dispatch (C1, state join) +
+  *                  MERGE into state (L1/O10), one per-key fold }
   *
   * What the reference hand-builds, the runtime provides:
   *  - micro-batch buffering C3  -> `Trigger.ProcessingTime`
@@ -133,6 +133,17 @@ object TailQuery {
     deliverBulkDir(outcomes.sparkSession, batchDir, b)
   }
 
+  /** Streaming-source predicate set P3 (reference src/mongodb.ts:46-54):
+    * namespace equality, ts lower bound, and the null-safe
+    * `fromMigrate != true` (missing field matches, like Mongo `$ne`). */
+  private def streamFilters(df: DataFrame, ns: String, fromTs: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    df.filter(
+      col("ns") === ns &&
+        col("ts") >= fromTs &&
+        !coalesce(col("fromMigrate"), lit(false)))
+  }
+
   /** Start the tail stream. `oplogStream` must be a streaming DataFrame
     * with the OplogRow schema (ts, op, ns, id, doc, fromMigrate).
     *
@@ -167,7 +178,7 @@ object TailQuery {
     // per micro-batch — readable from progress.observedMetrics by any
     // monitoring hook, at zero extra passes over the batch
     graft.streaming.Observability
-      .observedStream(Compactor.streamFilters(oplogStream, ns, fromTs),
+      .observedStream(streamFilters(oplogStream, ns, fromTs),
         metricsName, keyCol = "id", tsCol = "ts")
       .writeStream
       .option("checkpointLocation", checkpointDir)

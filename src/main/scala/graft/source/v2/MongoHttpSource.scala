@@ -93,7 +93,7 @@ object MongoHttp {
     * travel as source options — which is exactly how the reference does
     * it (the ns/ts conditions are config-driven query arguments,
     * src/mongodb.ts:46-54, not an optimizer artifact). The engine still
-    * re-applies the same predicates post-scan (Compactor.streamFilters),
+    * re-applies the same predicates post-scan (TailQuery's P3 filter),
     * so a misbehaving server can't corrupt semantics. */
   /** `startingSeq`/`startAtHead` pick the stream's FIRST-start position
     * — the reference's `task.from.time` (src/index.ts:27-37: resume from

@@ -135,8 +135,8 @@ object StreamScd2 {
     * row), and Structured Streaming DOES re-offer the in-flight
     * micro-batch after a failure — so the applied batch id rides with
     * the version pointer and [[applyIfNew]] makes the replay an exact
-    * no-op. This is the SCD2 analog of the LWW store's ts-guard
-    * idempotence (StateStore.applyIRs), and the standard
+    * no-op. This is the SCD2 analog of the LWW state's ts-guard
+    * idempotence (the IR-wins-ties merge in BatchApplier), and the standard
     * exactly-once-sink contract for foreachBatch.
     *
     * Layout mirrors [[graft.cdc.StateStore]]: `v_<n>` parquet dirs +

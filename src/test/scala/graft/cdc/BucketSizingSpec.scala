@@ -87,7 +87,7 @@ class BucketSizingSpec extends AnyFunSuite {
     val snapshot = parquetSnapshot(200)
     val stat = BucketedStateStore.sizeStatistic(snapshot)
     val third = (stat.get.toLong + 2) / 3
-    val state = StateStore.applyIRs(StateStore.empty(spark), ScanJob.run(snapshot, task))
+    val state = ScanJob.snapshotState(snapshot, task)
     Seq(8 -> 3, 2 -> 2).foreach { case (cap, want) =>
       val dir = tmp("sizing-k")
       val capped = BucketedStateStore.Spec(nBuckets = cap)

@@ -7,16 +7,22 @@ import graft.core.Transformer
 import graft.model._
 import graft.source.EventsOplog
 
-/** End-to-end CDC correctness: the distributed pipeline (compact ->
-  * dispatch -> state merge) must equal a sequential pure-core model fold
-  * over the same inputs (SURVEY.md §5 test plan).
+/** End-to-end CDC correctness: the distributed apply (compact +
+  * dispatch + state merge in BatchApplier's one per-key fold) must equal
+  * a sequential pure-core model fold over the same inputs (SURVEY.md §5
+  * test plan), and each stage's behaviour is pinned on crafted batches.
   */
 class CdcPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val task = graft.SparkEntry.flagshipTask
   val sfDir = "/root/testdata/sf0.001"
 
-  test("Spark compactor == pure-core mergeOplogs on a crafted batch") {
+  /** (id, doc, parent, ts, action) outcomes of a keep-deletes apply. */
+  private def outcomes(df: org.apache.spark.sql.DataFrame): Set[(String, String, String, Long, String)] =
+    df.collect().map(r => (r.getAs[String]("id"), r.getAs[String]("doc"),
+      r.getAs[String]("parent"), r.getAs[Long]("ts"), r.getAs[String]("action"))).toSet
+
+  test("crafted batch: u folds into i, i+d annihilates, lone $set leaves no row") {
     import OplogRow.encoder
     val rows = Seq(
       OplogRow(BsonTs(0, 0).toLong, "i", "db.c", "k1", """{"_id":"k1","value":1.5}"""),
@@ -26,11 +32,10 @@ class CdcPipelineSpec extends AnyFunSuite {
       OplogRow(BsonTs(0, 2).toLong, "u", "db.c", "k3", """{"$set":{"value":9.0}}"""),
     )
     val vTask = TaskSpec(Vector("value" -> "value"))
-    val got = Compactor.compact(spark.createDataset(rows), vTask)
-      .collect().sortBy(r => (r.ns, r.id)).toSeq
-    val want = Transformer.mergeOplogs(vTask, rows.map(_.toCore))
-      .map(OplogRow.fromCore).sortBy(r => (r.ns, r.id))
-    assert(got === want)
+    // keep-deletes: the annihilated k2 must leave no tombstone either
+    val got = outcomes(BatchApplier.applyOplogBatchKeepDeletes(
+      spark.createDataset(rows), StateStore.empty(spark), vTask))
+    assert(got === Set(("k1", """{"_id":"k1","value":2.5}""", null, 1L, "upsert")))
   }
 
   /** Pure-core model of the whole batch pipeline. */
@@ -75,29 +80,24 @@ class CdcPipelineSpec extends AnyFunSuite {
   }
 
   test("full batch pipeline on sf0.001 events == pure-core model fold") {
-    val got = graft.SparkEntry.entry(spark)
-      .select("id", "doc").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val want = modelState()
-    assert(got.size === want.size, s"state sizes differ: got ${got.size} want ${want.size}")
-    val mismatches = want.collect { case (id, doc) if got.get(id) != Some(doc) => (id, doc, got.get(id)) }
-    assert(mismatches.isEmpty, s"first mismatches: ${mismatches.take(3)}")
-    assert(got.nonEmpty)
-  }
-
-  test("fused BatchApplier == modular compact->dispatch->merge on sf0.001 events") {
     import OplogRow.encoder
-    import graft.source.EventsOplog
+    val want = modelState()
     val events = graft.ops.Tables.events(spark, sfDir)
-    val oplog = EventsOplog.fromEvents(events).as[OplogRow]
-    val snap = EventsOplog.sourceSnapshot(events)
-    val fused = BatchApplier.applyOplogBatch(oplog, StateStore.empty(spark), task, Some(snap))
-      .select("id", "doc").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val compacted = Compactor.compact(oplog, task)
-    val irs = Dispatcher.dispatch(compacted, task, state = None, source = Some(snap))
-    val modular = StateStore.applyIRs(StateStore.empty(spark), irs)
-      .select("id", "doc").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(fused === modular)
-    assert(fused.nonEmpty)
+    // the source snapshot arrives raw (every signup, BatchApplier keeps
+    // the earliest per key) in the flagship entry, and deduplicated
+    // (one row per key, no ts column) otherwise
+    val applies = Seq(
+      "raw snapshot" -> graft.SparkEntry.entry(spark),
+      "deduplicated snapshot" -> BatchApplier.applyOplogBatch(
+        EventsOplog.fromEvents(events).as[OplogRow], StateStore.empty(spark), task,
+        Some(EventsOplog.sourceSnapshot(events))))
+    applies.foreach { case (name, state) =>
+      val got = state.select("id", "doc").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got.size === want.size, s"$name: state sizes differ: got ${got.size} want ${want.size}")
+      val mismatches = want.collect { case (id, doc) if got.get(id) != Some(doc) => (id, doc, got.get(id)) }
+      assert(mismatches.isEmpty, s"$name: first mismatches: ${mismatches.take(3)}")
+      assert(got.nonEmpty, name)
+    }
   }
 
   test("fused BatchApplier: untouched state passes through; stale replays lose") {
@@ -107,10 +107,13 @@ class CdcPipelineSpec extends AnyFunSuite {
       ("keep", """{"_id":"keep","value":1.0}""", null.asInstanceOf[String], 50L),
       ("upd", """{"_id":"upd","value":2.0}""", null.asInstanceOf[String], 50L),
       ("newer", """{"_id":"newer","value":3.0}""", null.asInstanceOf[String], 500L << 32),
+      ("gone", """{"_id":"gone","value":4.0}""", null.asInstanceOf[String], 50L),
     )).toDF("id", "doc", "parent", "ts")
     val batch = spark.createDataset(Seq(
       OplogRow(BsonTs(100, 0).toLong, "u", "db.c", "upd", """{"$set":{"value":9.0}}"""),
       OplogRow(BsonTs(100, 1).toLong, "u", "db.c", "newer", """{"$set":{"value":8.0}}"""), // stale vs state
+      OplogRow(BsonTs(100, 2).toLong, "d", "db.c", "gone", """{"_id":"gone"}"""), // newer than state
+      OplogRow(BsonTs(100, 3).toLong, "i", "db.c", "fresh", """{"_id":"fresh","value":5.0}"""),
     ))
     val out = BatchApplier.applyOplogBatch(batch, state, vTask)
       .collect().map(r => r.getAs[String]("id") -> r.getAs[String]("doc")).toMap
@@ -118,6 +121,7 @@ class CdcPipelineSpec extends AnyFunSuite {
       "keep" -> """{"_id":"keep","value":1.0}""",
       "upd" -> """{"_id":"upd","value":9.0}""",
       "newer" -> """{"_id":"newer","value":3.0}""", // state ts newer than event -> survives
+      "fresh" -> """{"_id":"fresh","value":5.0}""", // new key inserted; "gone" deleted
     ))
   }
 
@@ -138,26 +142,6 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(dropped.value === 2L)
   }
 
-  test("state store MERGE: LWW guard makes replays idempotent (O9/O10)") {
-    import IRRow.encoder
-    val irs1 = spark.createDataset(Seq(
-      IRRow("upsert", "a", """{"v":1}""", null, 10L),
-      IRRow("upsert", "b", """{"v":2}""", null, 10L),
-    ))
-    val s1 = StateStore.applyIRs(StateStore.empty(spark), irs1)
-    val irs2 = spark.createDataset(Seq(
-      IRRow("upsert", "a", """{"v":9}""", null, 5L), // stale replay: must lose
-      IRRow("delete", "b", null, null, 20L),
-      IRRow("upsert", "c", """{"v":3}""", null, 1L),
-    ))
-    val s2 = StateStore.applyIRs(s1, irs2)
-    val got = s2.select("id", "doc").collect().map(r => (r.getString(0), r.getString(1))).toMap
-    assert(got === Map(
-      "a" -> """{"_id":"a","v":1}""",
-      "c" -> """{"_id":"c","v":3}""",
-    ))
-  }
-
   test("dispatcher: parent-routed deletes resolve routing from sink state") {
     import OplogRow.encoder
     // reference src/processor.ts:209-213: a delete on a parent-routed task
@@ -170,13 +154,12 @@ class CdcPipelineSpec extends AnyFunSuite {
     val state = spark.createDataFrame(Seq(
       ("p1", """{"_id":"p1","value":1.0}""", "u42", 1L)
     )).toDF("id", "doc", "parent", "ts")
-    val irs = Dispatcher.dispatch(batch, pTask, Some(state)).collect()
-    assert(irs.length === 1)
-    assert(irs.head.action === "delete")
-    assert(irs.head.id === "p1")
-    assert(irs.head.parent === "u42")
-    // ghost: no sink state -> routing unresolvable -> dropped (reference
-    // emits nothing when the ES search finds no doc)
+    val out = outcomes(BatchApplier.applyOplogBatchKeepDeletes(batch, state, pTask))
+      .map { case (id, doc, parent, _, action) => (id, doc, parent, action) }
+    // the tombstone carries the recovered routing value; ghost: no sink
+    // state -> routing unresolvable -> dropped (reference emits nothing
+    // when the ES search finds no doc)
+    assert(out === Set(("p1", null, "u42", "delete")))
   }
 
   test("dispatcher: $set read-back re-injects stored parent into the IR") {
@@ -190,11 +173,8 @@ class CdcPipelineSpec extends AnyFunSuite {
     val state = spark.createDataFrame(Seq(
       ("p1", """{"_id":"p1","value":1.0}""", "u42", 1L)
     )).toDF("id", "doc", "parent", "ts")
-    val irs = Dispatcher.dispatch(batch, pTask, Some(state)).collect()
-    assert(irs.length === 1)
-    assert(irs.head.action === "upsert")
-    assert(irs.head.data === """{"value":5.0}""")
-    assert(irs.head.parent === "u42")
+    val out = outcomes(BatchApplier.applyOplogBatchKeepDeletes(batch, state, pTask))
+    assert(out === Set(("p1", """{"_id":"p1","value":5.0}""", "u42", 9L, "upsert")))
   }
 
   test("fused BatchApplier: parent routing survives $set read-back and deletes resolve") {
@@ -227,15 +207,16 @@ class CdcPipelineSpec extends AnyFunSuite {
     val source = spark.createDataFrame(Seq(
       ("sourced", """{"_id":"sourced","value":3.0}"""),
     )).toDF("id", "doc")
-    val irs = Dispatcher.dispatch(batch, vTask, Some(state), Some(source))
-      .collect().map(ir => ir.id -> ir.data).toMap
-    // known: state doc updated via applyUpdateESDoc -> value 42
-    assert(irs("known") === """{"value":42.0}""")
-    // sourced: no sink state -> source doc re-transformed (reference
-    // src/processor.ts:199-202: fallback doc is NOT update-applied)
-    assert(irs("sourced") === """{"value":3.0}""")
-    // ghost: neither -> dropped
-    assert(!irs.contains("ghost"))
+    val out = BatchApplier.applyOplogBatchKeepDeletes(batch, state, vTask, Some(source))
+      .collect().map(r => r.getAs[String]("id") -> r.getAs[String]("doc")).toMap
+    assert(out === Map(
+      // known: state doc updated via applyUpdateESDoc -> value 42
+      "known" -> """{"_id":"known","value":42.0}""",
+      // sourced: no sink state -> source doc re-transformed (reference
+      // src/processor.ts:199-202: fallback doc is NOT update-applied)
+      "sourced" -> """{"_id":"sourced","value":3.0}""",
+      // ghost: neither -> dropped
+    ))
   }
 
   test("incremental aggregate maintenance: two-batch delta fold == direct state aggregate") {

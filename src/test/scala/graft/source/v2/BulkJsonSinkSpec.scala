@@ -4,7 +4,6 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.cdc.IRRow
 
 /** The DSv2 bulk sink must emit the reference's _bulk body shape
   * (action line + source line, delete without source, parent routing in
@@ -13,13 +12,12 @@ class BulkJsonSinkSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("IR rows write as bulk bodies with parent routing and deletes") {
-    import IRRow.encoder
     val dir = Files.createTempDirectory("bulk-sink").toString
-    val irs = spark.createDataset(Seq(
-      IRRow("upsert", "a", """{"v":1}""", null, 10L),
-      IRRow("upsert", "b", """{"v":2}""", "u7", 11L),
-      IRRow("delete", "c", null, "u8", 12L),
-    ))
+    val irs = spark.createDataFrame(Seq(
+      ("upsert", "a", """{"v":1}""", null: String, 10L),
+      ("upsert", "b", """{"v":2}""", "u7", 11L),
+      ("delete", "c", null, "u8", 12L),
+    )).toDF("action", "id", "data", "parent", "ts")
     irs.coalesce(1).write
       .format("graft.source.v2.BulkJsonSink")
       .option("path", dir).option("index", "users_v1").option("type", "user")
@@ -47,12 +45,11 @@ class BulkJsonSinkSpec extends AnyFunSuite {
   }
 
   test("compress=true gzips each part file; bodies decode byte-identical") {
-    import IRRow.encoder
     val dir = Files.createTempDirectory("bulk-sink-gz").toString
-    val irs = spark.createDataset(Seq(
-      IRRow("upsert", "a", """{"v":1}""", null, 10L),
-      IRRow("delete", "c", null, null, 12L),
-    ))
+    val irs = spark.createDataFrame(Seq(
+      ("upsert", "a", """{"v":1}""", null: String, 10L),
+      ("delete", "c", null, null: String, 12L),
+    )).toDF("action", "id", "data", "parent", "ts")
     irs.coalesce(1).write
       .format("graft.source.v2.BulkJsonSink")
       .option("path", dir).option("index", "users_v1")

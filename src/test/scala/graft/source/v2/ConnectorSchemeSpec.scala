@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.cdc.{GraftTestFileSystem, IRRow}
+import graft.cdc.GraftTestFileSystem
 
 /** The DSv2 connectors must resolve every path — source dumps, split
   * probes, the streaming discovery log, bulk-body staging/rename —
@@ -73,12 +73,11 @@ class ConnectorSchemeSpec extends AnyFunSuite {
 
   test("bulk sink over graftfs: stages, renames and marks through the scheme") {
     registerScheme()
-    import IRRow.encoder
     val dir = Files.createTempDirectory("graftfs-bulk").toString
-    spark.createDataset(Seq(
-      IRRow("upsert", "a", """{"v":1}""", null, 10L),
-      IRRow("delete", "b", null, null, 11L),
-    )).coalesce(1).write
+    spark.createDataFrame(Seq(
+      ("upsert", "a", """{"v":1}""", null: String, 10L),
+      ("delete", "b", null, null: String, 11L),
+    )).toDF("action", "id", "data", "parent", "ts").coalesce(1).write
       .format("graft.source.v2.BulkJsonSink")
       .option("path", s"graftfs:$dir").option("index", "idx_v1")
       .mode("append").save()
