@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
 
 /** Incremental, log-structured state persistence for the CDC tail — the
@@ -86,6 +87,14 @@ import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
   * old manifest (the LWW ts-guard makes the replayed values identical).
   * [[vacuum]] retains the last `retainManifests` manifests for time
   * travel and deletes data directories no retained manifest references.
+  *
+  * This object is the only code that knows the layout. Two tables run
+  * on it: the CDC state above, and the streaming SCD2 history
+  * ([[graft.streaming.Scd2BucketedTable]]). The pointer, manifest,
+  * scan, lookup, commit, compaction, reshard and vacuum helpers take a
+  * [[Layout]] for what differs between them (key column, row schema,
+  * resolution rule), and the pointer may carry a second token (the
+  * history's last applied batch id).
   */
 object BucketedStateStore {
 
@@ -150,9 +159,33 @@ object BucketedStateStore {
     }
   }
 
-  /** Bucket assignment: Spark's codegen'd Murmur3 `hash`, stable across
-    * the write and every later read/lookup of the same store. */
-  def bucketCol(n: Int): Column = pmod(hash(col("id")), lit(n))
+  /** How a key's rows resolve across base and delta commits. */
+  private[graft] sealed trait Resolution
+  /** The key's row from the highest commit wins; an `action = delete`
+    * row is a tombstone that erases the key (the CDC state). */
+  private[graft] case object NewestRow extends Resolution
+  /** Every row of the key's highest commit is the key's value: each
+    * commit writes the key's complete row set (the SCD2 history). */
+  private[graft] case object NewestCommit extends Resolution
+
+  /** What a table on this layout defines: its key column, its row
+    * schema and its resolution rule. Files hold the rows plus `__seq`,
+    * and under [[NewestRow]] an `action` column before it. */
+  private[graft] final case class Layout(key: String, rows: StructType, resolution: Resolution) {
+    val cols: Seq[String] = rows.fieldNames.toSeq
+    val fileSchema: StructType = StructType(rows.fields ++
+      (if (resolution == NewestRow) Seq(StructField("action", StringType)) else Nil) :+
+      StructField("__seq", LongType))
+    /** Bucket assignment: Spark's codegen'd Murmur3 `hash`, stable
+      * across the write and every later read/lookup of the same store. */
+    def bucket(n: Int): Column = pmod(hash(col(key)), lit(n))
+    def empty(spark: SparkSession): DataFrame =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows)
+  }
+
+  private val Cdc = Layout("id", StateStore.schema, NewestRow)
+
+  def bucketCol(n: Int): Column = Cdc.bucket(n)
 
   // ---- manifest persistence (pointer swap, like StateStore.write) ----
   // All metadata IO goes through [[StateIO]] (the Hadoop FileSystem
@@ -163,13 +196,31 @@ object BucketedStateStore {
 
   def exists(dir: String): Boolean = StateIO.exists(pointer(dir))
 
-  def readManifest(dir: String): Option[Manifest] = {
+  /** Delete the pointer: `dir` no longer reads as a bucketed layout
+    * (its data files stay) — how a migration withdraws a half-built one. */
+  def withdraw(dir: String): Unit = StateIO.delete(pointer(dir))
+
+  /** The pointer's manifest seq and its optional second token: the file
+    * holds `<seq>` (CDC state) or `<seq> <token>` (SCD2 history, whose
+    * token is the last applied batch id). None when there is none. */
+  private[graft] def readPointer(dir: String): Option[(Long, Option[Long])] =
     if (!StateIO.exists(pointer(dir))) None
-    else {
-      val v = StateIO.readString(pointer(dir)).trim.toLong
-      Some(Manifest.parse(StateIO.readString(s"$dir/manifest/m_$v.json")))
+    else StateIO.readString(pointer(dir)).trim.split(' ') match {
+      case Array(s, t) => Some((s.toLong, Some(t.toLong)))
+      case Array(s)    => Some((s.toLong, None))
     }
-  }
+
+  /** Write the pointer. Callers that move it past a seq they loaded
+    * check it first ([[checkPointerUnmoved]]). */
+  private[graft] def writePointer(dir: String, seq: Long, token: Option[Long]): Unit =
+    StateIO.writeStringAtomic(pointer(dir), (seq +: token.toSeq).mkString(" "))
+
+  /** The current manifest; None before the first commit (a pointer may
+    * carry a token ahead of any commit, with seq -1). */
+  def readManifest(dir: String): Option[Manifest] =
+    readPointer(dir).collect { case (s, _) if s >= 0 =>
+      Manifest.parse(StateIO.readString(s"$dir/manifest/m_$s.json"))
+    }
 
   /** A RETAINED manifest by commit seq (None once vacuum dropped it) —
     * the time-travel entry point the retained-manifest chain exists
@@ -179,23 +230,15 @@ object BucketedStateStore {
     if (StateIO.exists(p)) Some(Manifest.parse(StateIO.readString(p))) else None
   }
 
-  private def writeManifest(dir: String, m: Manifest): Unit = {
+  private[graft] def writeManifest(dir: String, m: Manifest, token: Option[Long] = None): Unit = {
     StateIO.writeStringAtomic(s"$dir/manifest/m_${m.seq}.json", m.render)
-    StateIO.writeStringAtomic(pointer(dir), m.seq.toString)
+    writePointer(dir, m.seq, token)
   }
 
   // ---- reading ----
 
-  private val fileSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("doc", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("parent", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("action", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("__seq", org.apache.spark.sql.types.LongType)))
-
-  private def scanPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.schema(fileSchema).parquet(paths: _*)
+  private def scanPaths(spark: SparkSession, paths: Seq[String], l: Layout): DataFrame =
+    spark.read.schema(l.fileSchema).parquet(paths: _*)
 
   /** Scan the rows of `buckets` with per-delta bucket SCOPING — the
     * guard against tombstone resurrection. A shared delta dir can
@@ -214,7 +257,7 @@ object BucketedStateStore {
     * scans — a union would make every join above it (the point
     * lookup's semi join) run once per branch. */
   private def scanBuckets(
-      spark: SparkSession, dir: String, m: Manifest, buckets: Iterable[Int]): DataFrame = {
+      spark: SparkSession, dir: String, m: Manifest, buckets: Iterable[Int], l: Layout): DataFrame = {
     val bs = buckets.toSeq.sorted
     val baseRels = bs.flatMap(b => m.buckets.get(b).flatMap(_.base))
     // delta dir -> the buckets whose chain references it, grouped by
@@ -227,14 +270,14 @@ object BucketedStateStore {
       .sortBy(_._2.head)
     val rels = baseRels ++ ownerGroups.flatMap(_._2)
     if (rels.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], l.fileSchema)
     else {
-      val rows = scanPaths(spark, rels.map(rel => s"$dir/$rel"))
+      val rows = scanPaths(spark, rels.map(rel => s"$dir/$rel"), l)
       if (ownerGroups.isEmpty) rows
       else {
         def seqs(rs: Seq[String]): Column = col("__seq").isin(rs.map(commitSeq): _*)
         val scoped = ownerGroups.map { case (owners, deltas) =>
-          seqs(deltas) && bucketCol(m.nBuckets).isin(owners.map(Integer.valueOf): _*)
+          seqs(deltas) && l.bucket(m.nBuckets).isin(owners.map(Integer.valueOf): _*)
         }
         rows.filter((if (baseRels.isEmpty) scoped else seqs(baseRels) +: scoped).reduce(_ || _))
       }
@@ -245,13 +288,21 @@ object BucketedStateStore {
   private def commitSeq(rel: String): java.lang.Long =
     rel.split('/')(1).dropWhile(_ != '_').drop(1).toLong
 
-  /** LWW resolution across base+delta rows: highest commit wins (a key
-    * appears at most once per commit), tombstones erase. */
-  private def resolve(rows: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("id")).orderBy(col("__seq").desc)
-    rows.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("action") =!= "delete")
-      .select(StateStore.schemaCols.map(col): _*)
+  /** Resolution across base+delta rows by the layout's rule. Under
+    * [[NewestRow]] the highest commit wins (a key appears at most once
+    * per commit) and tombstones erase; under [[NewestCommit]] the key's
+    * rows from its highest commit are kept. */
+  private def resolve(rows: DataFrame, l: Layout): DataFrame = {
+    val w = Window.partitionBy(col(l.key))
+    val newest = l.resolution match {
+      case NewestRow =>
+        rows.withColumn("__rn", row_number().over(w.orderBy(col("__seq").desc)))
+          .filter(col("__rn") === 1 && col("action") =!= "delete")
+      case NewestCommit =>
+        rows.withColumn("__mx", max(col("__seq")).over(w))
+          .filter(col("__seq") === col("__mx"))
+    }
+    newest.select(l.cols.map(col): _*)
   }
 
   /** Current live state (id, doc, parent, ts) — the full-table read the
@@ -264,27 +315,27 @@ object BucketedStateStore {
     * therefore shuffle-free for almost all of the data instead of
     * re-windowing every row. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    readFrom(spark, dir, readManifest(dir))
+    readFrom(spark, dir, readManifest(dir), Cdc)
 
   /** Time-travel read: the live state AS OF commit `seq`. Safe for any
     * manifest vacuum still retains (vacuum only deletes data files no
     * retained manifest references); None once the manifest is gone. */
   def readAt(spark: SparkSession, dir: String, seq: Long): Option[DataFrame] =
-    manifestAt(dir, seq).map(m => readFrom(spark, dir, Some(m)))
+    manifestAt(dir, seq).map(m => readFrom(spark, dir, Some(m), Cdc))
 
-  private def readFrom(spark: SparkSession, dir: String, mOpt: Option[Manifest]): DataFrame =
+  private[graft] def readFrom(
+      spark: SparkSession, dir: String, mOpt: Option[Manifest], l: Layout): DataFrame =
     mOpt match {
       case Some(m) if m.buckets.nonEmpty =>
         val (clean, dirty) = m.buckets.partition(_._2.deltas.isEmpty)
         val parts = Seq(
           if (clean.isEmpty) None
-          else Some(scanPaths(spark, m.livePathsFor(dir, clean.keys))
-            .select(StateStore.schemaCols.map(col): _*)),
+          else Some(scanPaths(spark, m.livePathsFor(dir, clean.keys), l).select(l.cols.map(col): _*)),
           if (dirty.isEmpty) None
-          else Some(resolve(scanBuckets(spark, dir, m, dirty.keys))),
+          else Some(resolve(scanBuckets(spark, dir, m, dirty.keys, l), l)),
         ).flatten
         parts.reduce(_ unionByName _)
-      case _ => StateStore.empty(spark)
+      case _ => l.empty(spark)
     }
 
   /** Seed the store from a full state DataFrame (the scan backfill, L5
@@ -292,19 +343,19 @@ object BucketedStateStore {
     * exactly `spec.nBuckets` buckets (the backfill passes the count
     * [[bucketsFor]] picked). */
   def seed(state: DataFrame, dir: String, spec: Spec): Unit =
-    writeManifest(dir, writeBase(state, dir, 0L, spec.nBuckets))
+    writeManifest(dir, writeBase(state, dir, 0L, spec.nBuckets, Cdc))
 
-  /** One partitioned, id-sorted base write of `rows` into
+  /** One partitioned, key-sorted base write of `rows` into
     * `data/base_<seq>` — the layout every seed, compaction and reshard
     * produces — and the manifest whose buckets all point at it. */
-  private def writeBase(rows: DataFrame, dir: String, seq: Long, nBuckets: Int): Manifest = {
+  private[graft] def writeBase(rows: DataFrame, dir: String, seq: Long, nBuckets: Int, l: Layout): Manifest = {
     val rel = s"data/base_$seq"
-    rows.select(StateStore.schemaCols.map(col): _*)
-      .withColumn("action", lit("upsert"))
+    val live = rows.select(l.cols.map(col): _*)
+    (if (l.resolution == NewestRow) live.withColumn("action", lit("upsert")) else live)
       .withColumn("__seq", lit(seq))
-      .withColumn("__bucket", bucketCol(nBuckets))
+      .withColumn("__bucket", l.bucket(nBuckets))
       .repartition(col("__bucket"))
-      .sortWithinPartitions(col("__bucket"), col("id"))
+      .sortWithinPartitions(col("__bucket"), col(l.key))
       .write.partitionBy("__bucket").mode("overwrite").parquet(s"$dir/$rel")
     Manifest(nBuckets, seq,
       listBucketDirs(dir, rel).map { case (b, p) => b -> BucketFiles(Some(p), Vector.empty) })
@@ -339,30 +390,28 @@ object BucketedStateStore {
   def priorFor(spark: SparkSession, dir: String, keys: DataFrame): DataFrame =
     readManifest(dir) match {
       case None => StateStore.empty(spark)
-      case Some(m) =>
-        val st = batchStats(m.nBuckets, keys)
-        priorForStats(spark, dir, m, keys.select(col("id")), st)
+      case Some(m) => lookup(spark, dir, m, keys, batchStats(m.nBuckets, keys, Cdc), Cdc)
     }
 
   /** One tiny aggregate over the batch: its row count, a bound on its
     * distinct keys (the broadcast-cap probe), the dirty bucket ids and
-    * the id range — everything the planner-side pruning needs, in a
+    * the key range — everything the planner-side pruning needs, in a
     * single job. On a persisted batch this job is also the pass that
     * materialises it. */
-  private final case class BatchStats(rows: Long, keys: Long, dirty: Set[Int], lo: String, hi: String)
+  private[graft] final case class BatchStats(rows: Long, keys: Long, dirty: Set[Int], lo: Any, hi: Any)
 
-  private def batchStats(nBuckets: Int, batch: DataFrame): BatchStats = {
+  private[graft] def batchStats(nBuckets: Int, batch: DataFrame, l: Layout): BatchStats = {
     val row = batch.agg(
       count(lit(1)).as("n"),
-      approx_count_distinct(col("id")).as("k"),
-      collect_set(bucketCol(nBuckets)).as("bs"),
-      min(col("id")).as("lo"),
-      max(col("id")).as("hi")).head()
+      approx_count_distinct(col(l.key)).as("k"),
+      collect_set(l.bucket(nBuckets)).as("bs"),
+      min(col(l.key)).as("lo"),
+      max(col(l.key)).as("hi")).head()
     val rows = row.getLong(0)
     // the HLL estimate (5% relative standard deviation) plus a 4-sigma
     // margin, never above the row count
     val keys = math.min(rows, math.ceil(row.getLong(1) * 1.2).toLong)
-    BatchStats(rows, keys, row.getSeq[Int](2).toSet, row.getString(3), row.getString(4))
+    BatchStats(rows, keys, row.getSeq[Int](2).toSet, row.get(3), row.get(4))
   }
 
   /** Above this many distinct batch keys the point-lookup stops forcing
@@ -372,22 +421,24 @@ object BucketedStateStore {
     * that oversized trigger. */
   private[graft] val BroadcastKeyLimit = 500000L
 
-  /** The lookup is a LEFT SEMI join against the batch's raw ids: a semi
-    * join never duplicates a state row however often an id repeats in
-    * the batch, so the key side needs no distinct aggregate — no shuffle
-    * before the broadcast (the fold's source semi join keys the same
-    * way). */
-  private def priorForStats(
+  /** The rows of `m` for the batch keys in `batch` (its key column is
+    * read; every other column is dropped). The lookup is a LEFT SEMI
+    * join against the batch's raw keys: a semi join never duplicates a
+    * state row however often a key repeats in the batch, so the key side
+    * needs no distinct aggregate — no shuffle before the broadcast (the
+    * fold's source semi join keys the same way). */
+  private[graft] def lookup(
       spark: SparkSession, dir: String, m: Manifest,
-      ids: DataFrame, st: BatchStats): DataFrame = {
+      batch: DataFrame, st: BatchStats, l: Layout): DataFrame = {
     val paths = m.livePathsFor(dir, st.dirty)
-    if (paths.isEmpty || st.lo == null) StateStore.empty(spark)
+    if (paths.isEmpty || st.lo == null) l.empty(spark)
     else {
-      val keySide = if (st.keys <= BroadcastKeyLimit) broadcast(ids) else ids
+      val keys = batch.select(col(l.key))
+      val keySide = if (st.keys <= BroadcastKeyLimit) broadcast(keys) else keys
       resolve(
-        scanBuckets(spark, dir, m, st.dirty)
-          .filter(col("id") >= lit(st.lo) && col("id") <= lit(st.hi))
-          .join(keySide, Seq("id"), "left_semi"))
+        scanBuckets(spark, dir, m, st.dirty, l)
+          .filter(col(l.key) >= lit(st.lo) && col(l.key) <= lit(st.hi))
+          .join(keySide, Seq(l.key), "left_semi"), l)
     }
   }
 
@@ -397,8 +448,8 @@ object BucketedStateStore {
     * re-read immediately before each swap and the commit aborts if
     * another writer advanced it since our manifest was loaded. Only the
     * pointer file is read — the seq is all the check compares. */
-  private def checkPointerUnmoved(dir: String, expected: Long): Unit = {
-    val cur = if (StateIO.exists(pointer(dir))) StateIO.readString(pointer(dir)).trim.toLong else -1L
+  private[graft] def checkPointerUnmoved(dir: String, expected: Long): Unit = {
+    val cur = readPointer(dir).fold(-1L)(_._1)
     if (cur != expected)
       throw new java.util.ConcurrentModificationException(
         s"concurrent writer on bucketed state at $dir: manifest seq moved " +
@@ -415,20 +466,21 @@ object BucketedStateStore {
       applied: DataFrame, dir: String, spec: Spec, dirty: Set[Int],
       preSwap: () => Unit = () => ()): Long =
     commitOn(readManifest(dir).getOrElse(Manifest(spec.nBuckets, -1L, Map.empty)),
-      applied, dir, spec, dirty, TargetBucketBytes, preSwap)
+      applied, dir, spec, dirty, TargetBucketBytes, Cdc, None, preSwap)
 
   /** [[commitDelta]] against a manifest the caller already loaded (the
     * per-trigger apply reads it once for the lookup and the commit),
-    * growing the bucket count past `target` bytes per base. */
-  private def commitOn(
+    * growing the bucket count past `target` bytes per base. Every
+    * pointer swap writes `token` as the pointer's second token. */
+  private[graft] def commitOn(
       m: Manifest, applied: DataFrame, dir: String, spec: Spec, dirty: Set[Int],
-      target: Long, preSwap: () => Unit = () => ()): Long = {
+      target: Long, l: Layout, token: Option[Long], preSwap: () => Unit = () => ()): Long = {
     val spark = applied.sparkSession
     val seq = m.seq + 1
     val rel = s"data/delta_$seq"
     applied
       .withColumn("__seq", lit(seq))
-      .sortWithinPartitions(col("id")) // row-group stats for later pruning
+      .sortWithinPartitions(col(l.key)) // row-group stats for later pruning
       .write.mode("overwrite").parquet(s"$dir/$rel")
     var next = Manifest(m.nBuckets, seq, dirty.foldLeft(m.buckets) { (acc, b) =>
       val cur = acc.getOrElse(b, BucketFiles(None, Vector.empty))
@@ -436,7 +488,7 @@ object BucketedStateStore {
     })
     preSwap()
     checkPointerUnmoved(dir, m.seq)
-    writeManifest(dir, next)
+    writeManifest(dir, next, token)
 
     // amortized compaction: all over-threshold buckets in ONE job,
     // scanned bucket-scoped so a stale shared-delta row of an
@@ -444,7 +496,7 @@ object BucketedStateStore {
     val toCompact = next.buckets.filter(_._2.deltas.size >= spec.compactThreshold).keys.toSeq.sorted
     if (toCompact.nonEmpty) {
       val compacted = writeBase(
-        resolve(scanBuckets(spark, dir, next, toCompact)), dir, next.seq + 1, next.nBuckets)
+        resolve(scanBuckets(spark, dir, next, toCompact, l), l), dir, next.seq + 1, next.nBuckets, l)
       val rebased = toCompact.foldLeft(next.buckets) { (acc, b) =>
         compacted.buckets.get(b) match {
           case Some(f) => acc.updated(b, f)
@@ -453,14 +505,14 @@ object BucketedStateStore {
       }
       checkPointerUnmoved(dir, seq) // our own delta swap must still be current
       next = Manifest(next.nBuckets, compacted.seq, rebased)
-      writeManifest(dir, next)
+      writeManifest(dir, next, token)
       // growth: a compacted base past the target doubles the bucket
       // count, up to the cap — the sizing rule applied as the state grows.
       // The vacuum below keeps `retainManifests` of history across it:
       // each manifest carries its own count, and readAt scopes with it.
       val outgrown = next.nBuckets < spec.nBuckets && compacted.buckets.values
         .exists(_.base.exists(p => dataBytes(s"$dir/$p") > target))
-      if (outgrown) next = rebucket(spark, dir, next, math.min(2 * next.nBuckets, spec.nBuckets))
+      if (outgrown) next = rebucket(spark, dir, next, math.min(2 * next.nBuckets, spec.nBuckets), l, token)
     }
     vacuum(dir, spec.retainManifests)
     next.seq
@@ -505,15 +557,16 @@ object BucketedStateStore {
       onOutcomes: Option[DataFrame => Unit], target: Long): Option[Long] = {
     val spark = events.sparkSession
     val m = readManifest(dir).getOrElse(Manifest(spec.nBuckets, -1L, Map.empty))
-    val st = batchStats(m.nBuckets, events.toDF)
+    val batch = events.toDF()
+    val st = batchStats(m.nBuckets, batch, Cdc)
     if (st.rows == 0) None
     else {
-      val prior = priorForStats(spark, dir, m, events.select(col("id")), st)
+      val prior = lookup(spark, dir, m, batch, st, Cdc)
       val applied0 = BatchApplier.applyOplogBatchKeepDeletes(
         events, prior, task, source, dropped, batchKeyCount = Some(st.keys))
       val applied = if (onOutcomes.isDefined) applied0.persist() else applied0
       try {
-        val r = commitOn(m, applied, dir, spec, st.dirty, target)
+        val r = commitOn(m, applied, dir, spec, st.dirty, target, Cdc, None)
         onOutcomes.foreach(f => f(applied))
         Some(r)
       } finally if (onOutcomes.isDefined) { applied.unpersist(); () }
@@ -530,17 +583,24 @@ object BucketedStateStore {
     * history, an explicit reshard then drops every older manifest and
     * the old layout's files. Run it BETWEEN micro-batches (same
     * single-writer contract as commits themselves). */
-  def reshard(spark: SparkSession, dir: String, newNBuckets: Int): Unit = {
+  def reshard(spark: SparkSession, dir: String, newNBuckets: Int): Unit =
+    reshard(spark, dir, newNBuckets, Cdc, None, retain = 1)
+
+  /** [[reshard]] on any layout, keeping `token` on the pointer and
+    * `retain` manifests of history afterwards. */
+  private[graft] def reshard(spark: SparkSession, dir: String, newNBuckets: Int,
+      l: Layout, token: Option[Long], retain: Int): Unit = {
     val m = readManifest(dir).getOrElse(
       throw new IllegalStateException(s"no bucketed state at $dir to reshard"))
-    rebucket(spark, dir, m, newNBuckets)
-    vacuum(dir, 1) // an explicit reshard reclaims the old layout's disk at once
+    rebucket(spark, dir, m, newNBuckets, l, token)
+    vacuum(dir, retain)
   }
 
-  private def rebucket(spark: SparkSession, dir: String, m: Manifest, newNBuckets: Int): Manifest = {
-    val next = writeBase(readFrom(spark, dir, Some(m)), dir, m.seq + 1, newNBuckets)
+  private def rebucket(spark: SparkSession, dir: String, m: Manifest, newNBuckets: Int,
+      l: Layout, token: Option[Long]): Manifest = {
+    val next = writeBase(readFrom(spark, dir, Some(m), l), dir, m.seq + 1, newNBuckets, l)
     checkPointerUnmoved(dir, m.seq)
-    writeManifest(dir, next)
+    writeManifest(dir, next, token)
     next
   }
 
@@ -550,7 +610,7 @@ object BucketedStateStore {
     */
   def vacuum(dir: String, retain: Int): Unit = {
     if (!StateIO.exists(s"$dir/manifest")) return
-    val current = StateIO.readString(pointer(dir)).trim.toLong
+    val current = readPointer(dir).fold(-1L)(_._1)
     val all = StateIO.list(s"$dir/manifest")
       .flatMap { st =>
         val n = st.getPath.getName

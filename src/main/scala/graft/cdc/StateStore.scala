@@ -1,6 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Engine-owned sink state — the architectural replacement for the
   * reference's sink read-back (S6/S7, reference src/elasticsearch.ts:30-148)
@@ -29,17 +30,15 @@ object StateStore {
 
   val schemaCols = Seq("id", "doc", "parent", "ts")
 
-  def empty(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("id", StringType),
-        StructField("doc", StringType),
-        StructField("parent", StringType),
-        StructField("ts", LongType),
-      )))
-  }
+  val schema: StructType = StructType(Seq(
+    StructField("id", StringType),
+    StructField("doc", StringType),
+    StructField("parent", StringType),
+    StructField("ts", LongType),
+  ))
+
+  def empty(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   // ---- versioned parquet persistence ----
   // Metadata IO goes through [[StateIO]] (Hadoop FileSystem layer):

@@ -20,13 +20,14 @@ import org.apache.spark.sql.types._
   * State discipline: history is corpus-sized, so it lives in a
   * mergeable TABLE, never the streaming state store (DESIGN.md) — the
   * same doctrine as the CDC tail's document state. [[applyBatch]] is
-  * the pure MERGE; wiring is `foreachBatch` + the versioned-parquet (or
-  * bucketed) persistence the state stores already provide. At 100 TB
-  * the union-rewrite below becomes a `MERGE INTO` touching only the
-  * files holding matched keys (the BucketedStateStore incremental
-  * shape); the per-batch dataflow — one hash exchange on the key for
-  * the batch's windows, a key-equi join against open versions — is
-  * unchanged.
+  * the pure MERGE; wiring is `foreachBatch` + one of two persistence
+  * backends ([[table]]): the versioned parquet [[Scd2Table]], which
+  * rewrites the whole history per batch, or [[Scd2BucketedTable]], which
+  * runs the merge over only the batch's keys on the CDC state's own
+  * bucketed layout code ([[graft.cdc.BucketedStateStore]]) and writes
+  * the touched keys' new history as one delta. Either way the
+  * per-batch dataflow — one hash exchange on the key for the batch's
+  * windows, a key-equi join against open versions — is the same.
   *
   * Ordering contract: batches must arrive in event-time order per key
   * (the oplog total-order guarantee the serial micro-batch tail

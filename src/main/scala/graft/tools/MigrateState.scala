@@ -62,7 +62,7 @@ object MigrateState {
     if (diff != 0) {
       // verification failed: withdraw the half-built bucketed layout so
       // the directory stays unambiguously legacy
-      StateIO.delete(s"$dir/MANIFEST")
+      BucketedStateStore.withdraw(dir)
       throw new IllegalStateException(
         s"migration verification failed for $dir: $diff differing rows; legacy store untouched")
     }
@@ -91,7 +91,7 @@ object MigrateState {
     bucketed.seed(legacy, lastBatchId)
     val diff = diffCount(legacy, bucketed.read())
     if (diff != 0) {
-      StateIO.delete(s"$dir/MANIFEST")
+      BucketedStateStore.withdraw(dir)
       throw new IllegalStateException(
         s"migration verification failed for $dir: $diff differing rows; legacy history untouched")
     }
@@ -126,7 +126,7 @@ object MigrateState {
     if (now != pointerAtStart) {
       // withdraw the half-built bucketed layout so the directory stays
       // unambiguously legacy, exactly like a failed verification
-      StateIO.delete(s"$dir/MANIFEST")
+      BucketedStateStore.withdraw(dir)
       throw new IllegalStateException(
         s"concurrent writer on legacy store at $dir during migration: " +
           s"VERSION moved from '$pointerAtStart' to '$now'; bucketed manifest " +
