@@ -2,13 +2,11 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
 /** Trained BPE tokenizer (r14 verdict #4) — `text_bpe_merge_step`'s
   * single oracle-checked step iterated to a merge LIST under a fixed
-  * budget, with the [[LrModel]] sidecar discipline applied to the
-  * result (train once per corpus, persist, restart = zero retrain).
+  * budget, the result persisted as a stamped [[Sidecar]] TSV (train
+  * once per corpus, persist, restart = zero retrain).
   *
   * Training follows Sennrich et al. 2016's weighted-vocabulary shape:
   * the corpus collapses to (distinct word, frequency) ONCE (Heaps-
@@ -48,10 +46,6 @@ object BpeModel {
     * a second session loads the sidecar instead of bumping this. */
   @volatile var trainCount: Long = 0L
 
-  private def fileFor(dir: String): Path =
-    CodebookStore.indexRoot.resolve(
-      s"bpe_merges_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}.tsv")
-
   /** word → wrapped single-char tokens (`␁c␂` per character). */
   def encode(c: Column): Column =
     regexp_replace(c, "(.)", U1 + "$1" + U2)
@@ -73,34 +67,6 @@ object BpeModel {
   def tokensCol(c: Column): Column =
     transform(split(c, U2 + U1),
       x => regexp_replace(x, lit(s"[$U1$U2]"), lit("")))
-
-  private def save(p: Path, stamp: String,
-      merges: Vector[(String, String)], tokens: Vector[Long]): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    val lines = s"#corpus_stamp=$stamp" +:
-      s"#tokens_per_round=${tokens.mkString(",")}" +:
-      merges.map { case (a, b) => s"$a\t$b" }
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def load(p: Path,
-      stamp: String): Option[(Vector[(String, String)], Vector[Long])] =
-    if (!Files.exists(p)) None
-    else {
-      val lines = Files.readAllLines(p).asScala.toVector
-      if (!lines.headOption.contains(s"#corpus_stamp=$stamp")) None
-      else {
-        val tokens = lines(1).stripPrefix("#tokens_per_round=").split(",")
-          .filter(_.nonEmpty).map(_.toLong).toVector
-        val merges = lines.drop(2).map { l =>
-          val Array(a, b) = l.split("\t", 2); (a, b)
-        }
-        Some((merges, tokens))
-      }
-    }
 
   /** One training loop over the weighted vocabulary. Returns the
     * ordered merges and the weighted total token count after each. */
@@ -147,11 +113,19 @@ object BpeModel {
   def loadOrTrainWithTotals(spark: SparkSession,
       dir: String): (Vector[(String, String)], Vector[Long]) = {
     val stamp = CorpusStamp.of(spark, dir, "documents", "doc_id").token
-    val p = fileFor(dir)
-    load(p, stamp).getOrElse {
+    val p = Sidecar.path("bpe_merges", dir, ".tsv")
+    Sidecar.readTsv(p, stamp).map { lines =>
+      val tokens = lines(0).stripPrefix("#tokens_per_round=").split(",")
+        .filter(_.nonEmpty).map(_.toLong).toVector
+      val merges = lines.drop(1).map { l =>
+        val Array(a, b) = l.split("\t", 2); (a, b)
+      }
+      (merges, tokens)
+    }.getOrElse {
       val (merges, totals) = train(spark, dir)
       trainCount += 1
-      save(p, stamp, merges, totals)
+      Sidecar.writeTsv(p, stamp, s"#tokens_per_round=${totals.mkString(",")}" +:
+        merges.map { case (a, b) => s"$a\t$b" })
       (merges, totals)
     }
   }

@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 /** Persistent store for trained IVF codebooks.
   *
@@ -21,11 +20,10 @@ import scala.jdk.CollectionConverters._
   * assignment cost (N·|C|) and the per-probe scan (N/|C|) balanced as
   * the corpus grows, instead of the flat k=64 literal used before.
   *
-  * Serialization is plain text, one centroid per line
+  * Serialization is a stamped [[Sidecar]] TSV, one centroid per line
   * (`cid<TAB>cn<TAB>v0,v1,...`), doubles via their shortest
   * round-trippable repr (`java.lang.Double.toString` → `.toDouble` is
-  * exact by spec), written to a temp file and atomically renamed — a
-  * concurrent second driver sees either nothing or a complete file.
+  * exact by spec).
   */
 object CodebookStore {
 
@@ -58,45 +56,20 @@ object CodebookStore {
   def kFor(n: Long, cap: Int = kCap): Int =
     math.min(cap.toLong, math.max(4L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
 
-  private def fileFor(dir: String, k: Int): Path = {
-    val sane = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    indexRoot.resolve(s"codebook_${sane}_k$k.tsv")
-  }
-
-  private def save(p: Path, stamp: String, cb: Codebook): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    val lines = s"#corpus_stamp=$stamp" +: cb.map { case (cid, cv, cn) =>
-      s"$cid\t$cn\t${cv.mkString(",")}"
-    }
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Load iff the header's corpus stamp (row count + id-set hash,
-    * [[CorpusStamp]]) matches — a regenerated corpus, even one landing
-    * on the same cardinality and k, must retrain, not silently reuse
-    * centroids from vanished data. */
-  private def load(p: Path, stamp: String): Option[Codebook] =
-    if (!Files.exists(p)) None
-    else {
-      val lines = Files.readAllLines(p).asScala.toVector
-      if (lines.headOption.contains(s"#corpus_stamp=$stamp"))
-        Some(lines.tail.map { line =>
-          val Array(cid, cn, vs) = line.split("\t", 3)
-          (cid.toLong, vs.split(",").map(_.toDouble).toVector, cn.toDouble)
-        })
-      else None
-    }
-
   /** Load the persisted codebook for `dir` if one exists; otherwise
     * train (√N-sized), persist, and return it. */
   def loadOrTrain(spark: SparkSession, dir: String): Codebook = {
     val st = CorpusStamp.of(spark, dir, "embeddings", "vec_id")
     val k = kFor(st.rows)
-    val p = fileFor(dir, k)
-    load(p, st.token).getOrElse {
+    val p = Sidecar.path("codebook", dir, s"_k$k.tsv")
+    // valid iff the header's corpus stamp (row count + id-set hash,
+    // [[CorpusStamp]]) matches — a regenerated corpus, even one landing
+    // on the same cardinality and k, must retrain, not silently reuse
+    // centroids from vanished data
+    Sidecar.readTsv(p, st.token).map(_.map { line =>
+      val Array(cid, cn, vs) = line.split("\t", 3)
+      (cid.toLong, vs.split(",").map(_.toDouble).toVector, cn.toDouble)
+    }).getOrElse {
       val (codebook, _) =
         KMeans.train(spark, dir, k = k, rounds = 3, computeObjective = false)
       val cb = codebook.select(col("cid").cast("long"), col("cv"), col("cn"))
@@ -104,28 +77,31 @@ object CodebookStore {
         .collect().toVector
         .map(r => (r.getLong(0), r.getSeq[Double](1).toVector, r.getDouble(2)))
       trainCount += 1
-      save(p, st.token, cb)
+      Sidecar.writeTsv(p, st.token, cb.map { case (cid, cv, cn) =>
+        s"$cid\t$cn\t${cv.mkString(",")}"
+      })
       cb
     }
   }
 }
 
-/** Persistent store for the trained PQ index — the same sidecar
-  * discipline as [[CodebookStore]] applied to BOTH halves of the
-  * product-quantization state (r9 verdict next-round #7): the
-  * per-subspace codebook (M×K centroids, a small TSV) and the encoded
-  * code table (one (vec_id, j, code) row per vector per subspace — the
-  * "parquet table of codes beside the vectors" a deployment
-  * materializes once). Before round 10 both lived in per-JVM maps, so
-  * a restarted session silently re-trained AND re-encoded — at 100 TB
-  * the re-encode alone is a full corpus pass.
+/** Persistent store for the trained PQ index — both halves of the
+  * product-quantization state as [[Sidecar]]s (r9 verdict next-round
+  * #7): the per-subspace codebook (M×K centroids, a stamped TSV) and the
+  * encoded code table (one (n_id, j, code) row per vector per subspace —
+  * the "parquet table of codes beside the vectors" a deployment
+  * materializes once, a segment manifest). Before round 10 both lived in
+  * per-JVM maps, so a restarted session silently re-trained AND
+  * re-encoded — at 100 TB the re-encode alone is a full corpus pass.
   *
   * Consistency: training is deterministic in the corpus, so codebook
-  * and codes are each valid iff their `#corpus_rows` header matches
-  * the live corpus — no cross-file ordering needed (a crash between
-  * the two writes just re-derives the missing half on restart). The
-  * codebook TSV commits via temp-file + atomic rename; the codes
-  * parquet directory via temp-dir + atomic rename.
+  * and codes are each valid iff they record the live corpus stamp — no
+  * cross-file ordering needed (a crash between the two writes just
+  * re-derives the missing half on restart). A vector's codes are
+  * written exactly once, by the segment that introduced it — codes never
+  * change under a frozen codebook, so the code segments read as a plain
+  * union with no latest-wins resolution. The callers supply the training
+  * and the encode dataflow; this object owns when they run.
   */
 object PqStore {
 
@@ -136,144 +112,75 @@ object PqStore {
   @volatile var trainCount: Long = 0L
   @volatile var encodeCount: Long = 0L
 
-  /** Bumped on every O(batch) delta encode ([[absorbCodes]]); the
-    * absorb spec pins that absorbing never bumps [[encodeCount]]. */
+  /** Bumped on every O(batch) delta encode ([[absorb]]); the absorb
+    * spec pins that absorbing never bumps [[encodeCount]]. */
   @volatile var absorbCount: Long = 0L
 
-  private def sane(dir: String) = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+  private def codes(dir: String, m: Int, k: Int) =
+    new Sidecar.Manifest(Sidecar.path("pq_codes", dir, s"_m${m}k$k.parquet"))
 
-  private def codebookFile(dir: String, m: Int, k: Int): Path =
-    CodebookStore.indexRoot.resolve(s"pq_codebook_${sane(dir)}_m${m}k$k.tsv")
+  private def liveStamp(spark: SparkSession, dir: String): String =
+    CorpusStamp.of(spark, dir, "embeddings", "vec_id").token
 
-  private def codesDir(dir: String, m: Int, k: Int): Path =
-    CodebookStore.indexRoot.resolve(s"pq_codes_${sane(dir)}_m${m}k$k.parquet")
-
-  def saveCodebook(dir: String, m: Int, k: Int, stamp: String, cb: PqCodebook): Unit = {
-    val p = codebookFile(dir, m, k)
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    val lines = s"#corpus_stamp=$stamp" +: cb.map { case (j, cid, cv) =>
-      s"$j\t$cid\t${cv.mkString(",")}"
-    }
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def loadCodebook(dir: String, m: Int, k: Int, stamp: String): Option[PqCodebook] = {
-    val p = codebookFile(dir, m, k)
-    if (!Files.exists(p)) None
-    else {
-      val lines = Files.readAllLines(p).asScala.toVector
-      if (lines.headOption.contains(s"#corpus_stamp=$stamp"))
-        Some(lines.tail.map { line =>
-          val Array(j, cid, vs) = line.split("\t", 3)
-          (j.toInt, cid.toLong, vs.split(",").map(_.toDouble).toVector)
-        })
-      else None
+  /** dir's codebook: the persisted one if it records the live stamp,
+    * else `train`ed and persisted. */
+  def loadOrTrain(spark: SparkSession, dir: String, m: Int, k: Int)(
+      train: => PqCodebook): PqCodebook = {
+    val p = Sidecar.path("pq_codebook", dir, s"_m${m}k$k.tsv")
+    val stamp = liveStamp(spark, dir)
+    Sidecar.readTsv(p, stamp).map(_.map { line =>
+      val Array(j, cid, vs) = line.split("\t", 3)
+      (j.toInt, cid.toLong, vs.split(",").map(_.toDouble).toVector)
+    }).getOrElse {
+      val cb = train
+      trainCount += 1
+      Sidecar.writeTsv(p, stamp, cb.map { case (j, cid, cv) =>
+        s"$j\t$cid\t${cv.mkString(",")}"
+      })
+      cb
     }
   }
 
-  /** Write one immutable code segment `(n_id, j, code)` stamped with
-    * the CUMULATIVE corpus token after it lands; returns the segment
-    * dir name. Segments are append-only: a vector's codes are written
-    * exactly once, by the segment that introduced it — codes never
-    * change under a frozen codebook, so reads are a plain union with
-    * no latest-wins resolution. */
-  private def writeSegment(codes: org.apache.spark.sql.DataFrame,
-      dir: String, m: Int, k: Int, cumulativeStamp: String): String = {
-    val base = codesDir(dir, m, k)
-    Files.createDirectories(base.getParent)
-    val version = java.util.UUID.randomUUID().toString
-    val vdir = base.getParent.resolve(base.getFileName.toString + s".v-$version")
-    codes.write.parquet(vdir.toString)
-    Files.writeString(vdir.resolve("_CORPUS_ROWS"), cumulativeStamp)
-    vdir.getFileName.toString
+  /** dir's code table: the persisted one if it records the live stamp,
+    * else the whole corpus `encode`d and persisted as one segment. */
+  def loadOrEncode(spark: SparkSession, dir: String, m: Int, k: Int)(
+      encode: DataFrame => DataFrame): DataFrame = {
+    val stamp = liveStamp(spark, dir)
+    val man = codes(dir, m, k)
+    Sidecar.read(spark, man.valid(stamp).getOrElse {
+      encodeCount += 1
+      man.commit(stamp)(seg =>
+        encode(graft.ops.Tables.table(spark, dir, "embeddings")).write.parquet(seg.toString))
+    })
   }
 
-  /** Atomically swap the manifest (one segment name per line — the
-    * KnnGraphStore LSM shape) to `newSegs`, reclaiming segments
-    * referenced by neither the new manifest nor the immediately
-    * previous one (a concurrent session may hold a lazy DataFrame over
-    * the previous generation). */
-  private def swapManifest(dir: String, m: Int, k: Int,
-      newSegs: Vector[String]): Unit = {
-    val base = codesDir(dir, m, k)
-    val ptr = pointerFor(base)
-    val previous = segments(dir, m, k).map(_.getFileName.toString)
-    val tmp = Files.createTempFile(base.getParent, ptr.getFileName.toString, ".tmp")
-    Files.writeString(tmp, newSegs.mkString("\n"))
-    Files.move(tmp, ptr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    val prefix = base.getFileName.toString + ".v-"
-    val keep = newSegs.toSet ++ previous
-    val listing = Files.list(base.getParent)
-    try listing.forEach { q =>
-      val name = q.getFileName.toString
-      if (name.startsWith(prefix) && !keep.contains(name))
-        try org.apache.commons.io.FileUtils.deleteDirectory(q.toFile)
-        catch { case _: java.io.IOException => () }
-    } finally listing.close()
-  }
-
-  /** Persist a FULL encode as a one-segment manifest (rebuild path). */
-  def saveCodes(codes: org.apache.spark.sql.DataFrame,
-      dir: String, m: Int, k: Int, stamp: String): Unit = {
-    val seg = writeSegment(codes, dir, m, k, stamp)
-    swapManifest(dir, m, k, Vector(seg))
+  /** Bootstrap/test hook (the KnnGraphStore.buildBaseFor shape): encode
+    * and persist ONLY `subset` of dir's corpus, recording SUBSET's
+    * stamp — the base state an [[absorb]] then extends. */
+  def encodeBase(dir: String, m: Int, k: Int, subset: DataFrame)(
+      encode: DataFrame => DataFrame): Unit = {
+    encodeCount += 1
+    codes(dir, m, k).commit(CorpusStamp.ofFrame(subset, "vec_id").token)(seg =>
+      encode(subset).write.parquet(seg.toString))
   }
 
   /** O(batch) incremental encode (r15 verdict #6, the
-    * KnnGraphStore.absorb discipline): `encodedBatch` — the batch's
-    * codes against the FROZEN codebook — lands as a delta segment with
-    * the additive cumulative stamp; the existing corpus is never
-    * re-encoded. A codebook retrain event is by definition a rebuild
-    * event (same lifecycle contract as the kNN graph sidecar). */
-  def absorbCodes(encodedBatch: org.apache.spark.sql.DataFrame,
-      dir: String, m: Int, k: Int, cumulativeStamp: String): Unit = {
-    val prevSegs = segments(dir, m, k).map(_.getFileName.toString)
-    require(prevSegs.nonEmpty, s"no pq code table to absorb into for $dir — encode first")
-    val seg = writeSegment(encodedBatch, dir, m, k, cumulativeStamp)
+    * KnnGraphStore.absorb discipline): `batch` — landed in dir's
+    * embeddings table — is `encode`d against the FROZEN codebook and
+    * lands as a delta segment recording the cumulative stamp; the
+    * existing corpus is never re-encoded. A codebook retrain event is by
+    * definition a rebuild event (the kNN graph's lifecycle contract).
+    * Returns the updated code table. */
+  def absorb(spark: SparkSession, dir: String, m: Int, k: Int, batch: DataFrame)(
+      encode: DataFrame => DataFrame): DataFrame = {
+    val man = codes(dir, m, k)
+    val (prev, stamp) = man.tip.getOrElse(
+      sys.error(s"no pq code table to absorb into for $dir — encode first"))
+    val cumulative = (CorpusStamp.Stamp.parse(stamp) + CorpusStamp.ofFrame(batch, "vec_id")).token
     absorbCount += 1
-    swapManifest(dir, m, k, prevSegs :+ seg)
-  }
-
-  private def pointerFor(base: Path): Path =
-    base.getParent.resolve(base.getFileName.toString + ".PTR")
-
-  /** Manifest segments referenced by the current pointer (empty when
-    * no index exists). A pre-round-16 single-version pointer is a
-    * one-line manifest — parsed identically. */
-  private def segments(dir: String, m: Int, k: Int): Vector[Path] = {
-    val base = codesDir(dir, m, k)
-    val ptr = pointerFor(base)
-    if (!Files.exists(ptr)) Vector.empty
-    else Files.readString(ptr).trim.split("\n").toVector
-      .map(_.trim).filter(_.nonEmpty).map(base.getParent.resolve(_))
-  }
-
-  /** The cumulative stamp recorded by the LAST segment. */
-  private[llm] def recordedCodesStamp(dir: String, m: Int, k: Int): Option[String] = {
-    val segs = segments(dir, m, k)
-    segs.lastOption.map(_.resolve("_CORPUS_ROWS"))
-      .filter(Files.exists(_)).map(Files.readString(_).trim)
+    Sidecar.read(spark, man.commit(cumulative, prev)(seg => encode(batch).write.parquet(seg.toString)))
   }
 
   private[llm] def codeSegmentCount(dir: String, m: Int, k: Int): Int =
-    segments(dir, m, k).size
-
-  def loadCodes(spark: SparkSession, dir: String, m: Int, k: Int,
-      stamp: String): Option[org.apache.spark.sql.DataFrame] = {
-    val base = codesDir(dir, m, k)
-    val segs = segments(dir, m, k)
-    // legacy layout (pre-pointer, the round-10 first cut): the bare dir
-    val resolved = if (segs.nonEmpty) segs else if (Files.exists(base)) Vector(base) else Vector.empty
-    val valid = resolved.nonEmpty && {
-      val meta = resolved.last.resolve("_CORPUS_ROWS")
-      Files.exists(meta) && Files.readString(meta).trim == stamp
-    }
-    if (valid)
-      Some(resolved.map(p => spark.read.parquet(p.toString)).reduce(_.unionByName(_)))
-    else None
-  }
+    codes(dir, m, k).segments.size
 }

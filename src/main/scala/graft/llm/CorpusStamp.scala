@@ -24,18 +24,36 @@ import org.apache.spark.sql.functions._
   *     hash of the id column — one columnar scan of a single column,
   *     order-independent (sum is commutative, so the stamp is a pure
   *     function of the id SET regardless of partitioning), and
-  *     ADDITIVE over disjoint corpora (a segmented index can sum
-  *     per-segment stamps, the [[MinHashIndexStore]] manifest shape).
+  *     ADDITIVE over disjoint corpora (an absorbed delta segment
+  *     records the previous stamp plus [[ofFrame]] of its batch).
   *
   * Persisted sidecars store [[Stamp.token]] (`rows:fp`) and are valid
-  * iff the live token matches — the same contract as the old
-  * `_CORPUS_ROWS` count, with the collision window closed.
+  * iff the live token matches ([[Sidecar]]'s one validity rule).
   */
 object CorpusStamp {
 
   final case class Stamp(rows: Long, fp: Long) {
-    /** The value persisted in sidecar headers / `_CORPUS_ROWS` files. */
+    /** The value a sidecar persists and compares. */
     def token: String = s"$rows:$fp"
+
+    /** The stamp of the disjoint union of the two corpora. */
+    def +(o: Stamp): Stamp = Stamp(rows + o.rows, fp + o.fp)
+  }
+
+  object Stamp {
+    def parse(token: String): Stamp = {
+      val Array(rows, fp) = token.split(":").map(_.toLong)
+      Stamp(rows, fp)
+    }
+  }
+
+  /** The stamp of `df`'s rows keyed on `idCol` — one aggregate job, not
+    * cached. */
+  def ofFrame(df: DataFrame, idCol: String): Stamp = {
+    val r = df.agg(
+      count(lit(1)),
+      coalesce(sum(hash(col(idCol)).cast("long")), lit(0L))).head()
+    Stamp(r.getLong(0), r.getLong(1))
   }
 
   /** Bumped on every ACTUAL stamp job (the one-column scan); the
@@ -74,12 +92,8 @@ object CorpusStamp {
     val cached = cache.get(key)
     if (cached != null && cached._1 == sig) cached._2
     else {
-      val df = frame.getOrElse(graft.ops.Tables.table(spark, dir, table))
-      val r = df.agg(
-        count(lit(1)),
-        coalesce(sum(hash(col(idCol)).cast("long")), lit(0L))).head()
+      val st = ofFrame(frame.getOrElse(graft.ops.Tables.table(spark, dir, table)), idCol)
       jobCount += 1
-      val st = Stamp(r.getLong(0), r.getLong(1))
       cache.put(key, (sig, st))
       st
     }

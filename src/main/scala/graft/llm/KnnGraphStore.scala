@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import graft.expressions.VectorFunctions.{dot => ndot}
 
 /** Persistent k-NN graph sidecar — the graph-refined ANN index family
@@ -23,10 +23,9 @@ import graft.expressions.VectorFunctions.{dot => ndot}
   * the candidate pairs keeps [[degree]] edges. At 100 TB that is the
   * offline index build, paid once.
   *
-  * Persistence is the LSM segment discipline ([[MinHashIndexStore]]'s
-  * manifest applied to the graph, r14 verdict #3): the pointer file
-  * names an ordered list of immutable segment directories, each holding
-  * the EDGES it (re)derived, the probe ASSIGNMENTS of the vectors it
+  * Persistence is a [[Sidecar]] segment manifest (r14 verdict #3): an
+  * ordered list of immutable segment directories, each holding the
+  * EDGES it (re)derived, the probe ASSIGNMENTS of the vectors it
   * introduced, and the cumulative corpus stamp after it landed. A full
   * build writes one segment; [[absorb]] appends an O(batch) delta
   * segment when new vectors land — the existing corpus is never
@@ -83,13 +82,8 @@ object KnnGraphStore {
   /** Bumped on every segment compaction. */
   @volatile var compactCount: Long = 0L
 
-  private def sane(dir: String) = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def graphBase(dir: String): Path =
-    CodebookStore.indexRoot.resolve(s"knn_graph_${sane(dir)}_d$degree.parquet")
-
-  private def pointerFor(base: Path): Path =
-    base.getParent.resolve(base.getFileName.toString + ".PTR")
+  private def manifest(dir: String) =
+    new Sidecar.Manifest(Sidecar.path("knn_graph", dir, s"_d$degree.parquet"))
 
   /** The corpus frame the graph is defined over. */
   private def corpus(spark: SparkSession, dir: String): DataFrame =
@@ -144,59 +138,12 @@ object KnnGraphStore {
     edgesOf(assign, assign)
   }
 
-  /** Write one immutable segment (edges + introduced assignments +
-    * cumulative stamp); returns the segment dir name. */
-  private def writeSegment(dir: String, edges: DataFrame, assign: DataFrame,
-      cumulativeStamp: String): String = {
-    val base = graphBase(dir)
-    Files.createDirectories(base.getParent)
-    val version = java.util.UUID.randomUUID().toString
-    val vdir = base.getParent.resolve(base.getFileName.toString + s".v-$version")
-    edges.write.parquet(vdir.resolve("edges").toString)
+  /** Writes one segment's edges and its introduced assignments. */
+  private def segmentOf(edges: DataFrame, assign: DataFrame)(seg: Path): Unit = {
+    edges.write.parquet(seg.resolve("edges").toString)
     assign.select(col("vec_id"), col("cid"), col("probes"))
-      .write.parquet(vdir.resolve("assign").toString)
-    Files.writeString(vdir.resolve("_CORPUS_ROWS"), cumulativeStamp)
-    vdir.getFileName.toString
+      .write.parquet(seg.resolve("assign").toString)
   }
-
-  /** Atomically swap the manifest to `newSegs`, reclaiming segments
-    * referenced by neither the new manifest nor the immediately
-    * previous one (a concurrent session may hold a lazy DataFrame over
-    * the previous generation). */
-  private def swapManifest(dir: String, newSegs: Vector[String]): Unit = {
-    val base = graphBase(dir)
-    val ptr = pointerFor(base)
-    val previous = segments(dir).map(_.getFileName.toString)
-    val tmp = Files.createTempFile(base.getParent, ptr.getFileName.toString, ".tmp")
-    Files.writeString(tmp, newSegs.mkString("\n"))
-    Files.move(tmp, ptr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    val prefix = base.getFileName.toString + ".v-"
-    val keep = newSegs.toSet ++ previous
-    val listing = Files.list(base.getParent)
-    try listing.forEach { q =>
-      val name = q.getFileName.toString
-      if (name.startsWith(prefix) && !keep.contains(name))
-        try org.apache.commons.io.FileUtils.deleteDirectory(q.toFile)
-        catch { case _: java.io.IOException => () }
-    } finally listing.close()
-  }
-
-  /** Manifest segments referenced by the current pointer (empty when
-    * no index exists yet). */
-  private def segments(dir: String): Vector[Path] = {
-    val base = graphBase(dir)
-    val ptr = pointerFor(base)
-    if (!Files.exists(ptr)) Vector.empty
-    else Files.readString(ptr).trim.split("\n").toVector
-      .map(_.trim).filter(_.nonEmpty).map(base.getParent.resolve(_))
-  }
-
-  /** The cumulative stamp recorded by the LAST segment (the current
-    * covered-corpus token). */
-  private def recordedStamp(segs: Vector[Path]): Option[String] =
-    segs.lastOption.map(_.resolve("_CORPUS_ROWS"))
-      .filter(Files.exists(_)).map(Files.readString(_).trim)
 
   /** Edge table across segments, per-source latest-segment-wins. The
     * single-segment path is a plain parquet scan (today's plan shape);
@@ -222,44 +169,37 @@ object KnnGraphStore {
     segs.map(p => spark.read.parquet(p.resolve("assign").toString))
       .reduce(_.unionByName(_))
 
-  private def load(spark: SparkSession, dir: String, stamp: String): Option[DataFrame] = {
-    val segs = segments(dir)
+  /** The manifest of dir's graph: the persisted one if it records the
+    * live [[CorpusStamp]] token (row count + id-set hash,
+    * session-cached), else a full build. A regenerated corpus rebuilds
+    * even at identical cardinality; a restarted session over the same
+    * corpus loads with zero Spark jobs beyond the one cached stamp. */
+  private def fresh(spark: SparkSession, dir: String): Vector[Path] = {
+    val stamp = CorpusStamp.of(spark, dir, "embeddings", "vec_id").token
+    val m = manifest(dir)
     // every segment must carry the edges/assign layout (a pre-segment
     // sidecar generation is simply invalid → rebuild once)
-    val wellFormed = segs.nonEmpty && segs.forall(p =>
+    m.valid(stamp).filter(_.forall(p =>
       Files.exists(p.resolve("edges")) && Files.exists(p.resolve("assign")))
-    if (wellFormed && recordedStamp(segs).contains(stamp))
-      Some(readEdges(spark, segs))
-    else None
-  }
-
-  /** The edge table for `dir`: sidecar if fresh, else build + persist.
-    * The fingerprint is the [[CorpusStamp]] token (row count + id-set
-    * hash, session-cached) — a regenerated corpus rebuilds even at
-    * identical cardinality; a restarted session over the same corpus
-    * loads with zero Spark jobs beyond the one cached stamp. */
-  def loadOrBuild(spark: SparkSession, dir: String): DataFrame = {
-    val stamp = CorpusStamp.of(spark, dir, "embeddings", "vec_id").token
-    load(spark, dir, stamp).getOrElse {
+    ).getOrElse {
       buildCount += 1
       val assign = assignmentOf(spark, corpus(spark, dir),
         CodebookStore.loadOrTrain(spark, dir))
-      val seg = writeSegment(dir, edgesOf(assign, assign), assign, stamp)
-      swapManifest(dir, Vector(seg))
-      load(spark, dir, stamp).getOrElse(
-        sys.error(s"knn graph sidecar unreadable after save: $dir"))
+      m.commit(stamp)(segmentOf(edgesOf(assign, assign), assign))
     }
   }
+
+  /** The edge table for `dir`: sidecar if fresh, else build + persist. */
+  def loadOrBuild(spark: SparkSession, dir: String): DataFrame =
+    readEdges(spark, fresh(spark, dir))
 
   /** Home-cell assignment `(vec_id, cid)` from the fresh sidecar — the
     * cluster key graph-level analytics (PageRank centrality, per-cell
     * representative selection) group by. Freshness is [[loadOrBuild]]'s
     * (stamp-checked, builds at most once); the read itself is a plain
     * parquet scan over the segments' append-only assign tables. */
-  def loadAssign(spark: SparkSession, dir: String): DataFrame = {
-    loadOrBuild(spark, dir)
-    readAssign(spark, segments(dir)).select(col("vec_id"), col("cid"))
-  }
+  def loadAssign(spark: SparkSession, dir: String): DataFrame =
+    readAssign(spark, fresh(spark, dir)).select(col("vec_id"), col("cid"))
 
   /** Bootstrap/test hook: build + persist the edge table over only
     * `subset` (vec_id, embedding) of dir's corpus — recording SUBSET's
@@ -268,18 +208,14 @@ object KnnGraphStore {
     * pre-arrival half of a corpus. */
   private[llm] def buildBaseFor(spark: SparkSession, dir: String,
       subset: DataFrame): Unit = {
-    val vecs = prep(subset)
-    val st = vecs.agg(count(lit(1)),
-      coalesce(sum(hash(col("vec_id")).cast("long")), lit(0L))).head()
-    val assign = assignmentOf(spark, vecs, CodebookStore.loadOrTrain(spark, dir))
+    val assign = assignmentOf(spark, prep(subset), CodebookStore.loadOrTrain(spark, dir))
     buildCount += 1
-    val seg = writeSegment(dir, edgesOf(assign, assign), assign,
-      CorpusStamp.Stamp(st.getLong(0), st.getLong(1)).token)
-    swapManifest(dir, Vector(seg))
+    manifest(dir).commit(CorpusStamp.ofFrame(subset, "vec_id").token)(
+      segmentOf(edgesOf(assign, assign), assign))
   }
 
   /** O(batch) incremental graph maintenance (r14 verdict #3, the
-    * MinHashIndexStore.absorb discipline): `batch` (vec_id, embedding)
+    * delta-segment [[Sidecar.Manifest.commit]]): `batch` (vec_id, embedding)
     * vectors have LANDED in dir's embeddings table; extend the index to
     * cover them without a full rebuild.
     *
@@ -305,20 +241,16 @@ object KnnGraphStore {
     * the absorbed index with zero rebuild. Returns the updated edge
     * frame. */
   def absorb(spark: SparkSession, dir: String, batch: DataFrame): DataFrame = {
-    val prevSegs = segments(dir)
-    require(prevSegs.nonEmpty, s"no knn graph to absorb into for $dir — build first")
-    val prev = recordedStamp(prevSegs).getOrElse(
-      sys.error(s"knn graph manifest for $dir lacks a recorded stamp"))
-    val Array(prevRows, prevFp) = prev.split(":").map(_.toLong)
+    val m = manifest(dir)
+    val (prevSegs, prev) = m.tip.getOrElse(
+      sys.error(s"no knn graph to absorb into for $dir — build first"))
 
     val cb = CodebookStore.loadOrTrain(spark, dir)
     // lazy: the two consumers below are id-keyed joins that re-scan the
     // table — never materialize the corpus for an O(batch) operation
     val merged = corpus(spark, dir)
     val batchVecs = prep(batch)
-    val st = batchVecs.agg(count(lit(1)),
-      coalesce(sum(hash(col("vec_id")).cast("long")), lit(0L))).head()
-    val cumulative = CorpusStamp.Stamp(prevRows + st.getLong(0), prevFp + st.getLong(1)).token
+    val cumulative = (CorpusStamp.Stamp.parse(prev) + CorpusStamp.ofFrame(batch, "vec_id")).token
 
     // batch assignment: the only full-vector cell projection this path
     // runs — |batch| rows. Materialized once; it feeds three joins.
@@ -363,14 +295,12 @@ object KnnGraphStore {
       .filter(col("rank") <= degree)
       .select(col("src_id"), col("rank"), col("dst_id"), col("sim"))
 
-    val seg = writeSegment(dir, newEdges.unionByName(rerank), bAssign, cumulative)
+    val segs = m.commit(cumulative, prevSegs)(segmentOf(newEdges.unionByName(rerank), bAssign))
     absorbCount += 1
-    swapManifest(dir, prevSegs.map(_.getFileName.toString) :+ seg)
-    load(spark, dir, cumulative).getOrElse(
-      sys.error(s"knn graph for $dir failed to resolve after absorb"))
+    readEdges(spark, segs)
   }
 
-  private[llm] def segmentCount(dir: String): Int = segments(dir).size
+  private[llm] def segmentCount(dir: String): Int = manifest(dir).segments.size
 
   /** Offline compaction — fold the manifest back to ONE segment: edges
     * are the current latest-wins view, assignments the (append-only)
@@ -381,17 +311,13 @@ object KnnGraphStore {
     * the fold). The BucketedStateStore compaction discipline applied to
     * the graph. */
   def compact(spark: SparkSession, dir: String): DataFrame = {
-    val segs = segments(dir)
-    require(segs.nonEmpty, s"no knn graph to compact for $dir")
-    val stamp = recordedStamp(segs).getOrElse(
-      sys.error(s"knn graph manifest for $dir lacks a recorded stamp"))
-    if (segs.size > 1) {
-      val seg = writeSegment(dir, readEdges(spark, segs),
-        readAssign(spark, segs), stamp)
-      compactCount += 1
-      swapManifest(dir, Vector(seg))
-    }
-    load(spark, dir, stamp).getOrElse(
-      sys.error(s"knn graph for $dir failed to resolve after compact"))
+    val m = manifest(dir)
+    val (segs, stamp) = m.tip.getOrElse(sys.error(s"no knn graph to compact for $dir"))
+    readEdges(spark,
+      if (segs.size == 1) segs
+      else {
+        compactCount += 1
+        m.commit(stamp)(segmentOf(readEdges(spark, segs), readAssign(spark, segs)))
+      })
   }
 }

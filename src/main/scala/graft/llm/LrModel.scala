@@ -2,13 +2,11 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
 /** Trained-to-convergence quality classifier — `text_quality_lr_step`
-  * iterated until the 6-dp weight vector reaches a fixpoint, with the
-  * [[CodebookStore]] sidecar discipline applied to the resulting model
-  * (train once per corpus, persist, restart = zero retrain jobs).
+  * iterated until the 6-dp weight vector reaches a fixpoint, the
+  * resulting model persisted as a stamped [[Sidecar]] TSV (train once
+  * per corpus, persist, restart = zero retrain jobs).
   *
   * Each round is the oracle-checked single step's EXACT dataflow: one
   * partial-agg corpus pass computes the four mean-gradient statistics
@@ -45,33 +43,6 @@ object LrModel {
   private def rnd6(x: Double): Double =
     BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def fileFor(dir: String): Path =
-    CodebookStore.indexRoot.resolve(
-      s"lr_model_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}.tsv")
-
-  private def save(p: Path, stamp: String, w: Vector[Double], losses: Vector[Double]): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    val lines = s"#corpus_stamp=$stamp" +:
-      s"#losses=${losses.mkString(",")}" +:
-      seedWeights.map(_._1).zip(w).map { case (name, v) => s"$name\t$v" }
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def load(p: Path, stamp: String): Option[(Vector[Double], Vector[Double])] =
-    if (!Files.exists(p)) None
-    else {
-      val lines = Files.readAllLines(p).asScala.toVector
-      if (!lines.headOption.contains(s"#corpus_stamp=$stamp")) None
-      else {
-        val losses = lines(1).stripPrefix("#losses=").split(",")
-          .filter(_.nonEmpty).map(_.toDouble).toVector
-        Some((lines.drop(2).map(_.split("\t", 2)(1).toDouble), losses))
-      }
-    }
 
   /** One training loop: returns (trained weights, per-round loss at the
     * round's INCOMING weights). Stops at the 6-dp weight fixpoint, at a
@@ -123,11 +94,16 @@ object LrModel {
 
   def loadOrTrainWithLosses(spark: SparkSession, dir: String): (Vector[Double], Vector[Double]) = {
     val stamp = CorpusStamp.of(spark, dir, "documents", "doc_id").token
-    val p = fileFor(dir)
-    load(p, stamp).getOrElse {
+    val p = Sidecar.path("lr_model", dir, ".tsv")
+    Sidecar.readTsv(p, stamp).map { lines =>
+      val losses = lines(0).stripPrefix("#losses=").split(",")
+        .filter(_.nonEmpty).map(_.toDouble).toVector
+      (lines.drop(1).map(_.split("\t", 2)(1).toDouble), losses)
+    }.getOrElse {
       val (w, losses) = train(spark, dir)
       trainCount += 1
-      save(p, stamp, w, losses)
+      Sidecar.writeTsv(p, stamp, s"#losses=${losses.mkString(",")}" +:
+        seedWeights.map(_._1).zip(w).map { case (name, v) => s"$name\t$v" })
       (w, losses)
     }
   }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.Path
 
 /** Persistent MinHash/LSH posting-list index over the ARCHIVE half of
   * the corpus — the sidecar behind `pipeline_incremental_neardup`.
@@ -14,26 +14,22 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * archive snapshot, not once per arriving batch. This store
   * materializes the archive's `(doc_id, band, bucket)` rows
   * (DedupQueries.bandRows — the dedup_minhash_pairs signature scheme)
-  * as parquet SEGMENTS under a manifest pointer with the PqStore swap
-  * discipline: immutable versioned directories + an atomically-renamed
-  * pointer file, so a reader never races a replacement through a
-  * delete window and a crashed builder at worst leaves an orphaned
-  * unreferenced segment.
+  * as a [[Sidecar]] segment manifest: a full build writes one segment;
+  * [[absorb]] appends an O(batch) delta segment when a batch is
+  * ACCEPTED into the archive — the existing archive is never
+  * re-signatured (the BucketedStateStore motion applied to the index).
+  * Segment compaction is an offline concern, exactly like the bucketed
+  * store's.
   *
-  * The manifest is a newline-separated segment list (LSM-ish): a full
-  * build writes one segment; [[absorb]] appends an O(batch) delta
-  * segment when a batch is ACCEPTED into the archive — the existing
-  * archive is never re-signatured (the BucketedStateStore motion
-  * applied to the index). Segment compaction is an offline concern,
-  * exactly like the bucketed store's.
-  *
-  * Validity is keyed on the covered-document count (per-segment
-  * `_CORPUS_ROWS`, summed across the manifest): a regenerated corpus
-  * re-indexes instead of silently reusing signatures from vanished
-  * data — the CodebookStore/PqStore contract. The harness's archive
-  * predicate (doc_id % 10 <> 0, mirroring pipeline_incremental_dedup's
-  * batch split) is part of what the count fingerprints; a deployment
-  * indexes its whole archive and keys on the snapshot id instead.
+  * Validity is keyed on the covered-document count, which the last
+  * segment records cumulatively: a regenerated corpus re-indexes
+  * instead of silently reusing signatures from vanished data. The count
+  * (not the full [[CorpusStamp]] token) because absorb's covered docs
+  * are caller-owned and need not exist in the table. The harness's
+  * archive predicate (doc_id % 10 <> 0, mirroring
+  * pipeline_incremental_dedup's batch split) is part of what the count
+  * fingerprints; a deployment indexes its whole archive and keys on the
+  * snapshot id instead.
   */
 object MinHashIndexStore {
 
@@ -48,18 +44,17 @@ object MinHashIndexStore {
   /** Bumped on every segment compaction. */
   @volatile var compactCount: Long = 0L
 
-  private def sane(dir: String) = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-
   // "archive2": round-18 changed the band-bucket encoding (numeric
   // min-hash slices — see DedupQueries.bandRows); segments written
   // under the old name hold string-hex buckets that would silently
   // never match new-format batch bands, and validity is count-keyed,
   // so the format change must key the sidecar NAME.
-  private def baseFor(dir: String): Path =
-    CodebookStore.indexRoot.resolve(s"minhash_archive2_${sane(dir)}.parquet")
+  private def manifest(dir: String) =
+    new Sidecar.Manifest(Sidecar.path("minhash_archive2", dir, ".parquet"))
 
-  private def pointerFor(base: Path): Path =
-    base.getParent.resolve(base.getFileName.toString + ".PTR")
+  /** Writes the band rows of `docs` (doc_id, text) as one segment. */
+  private def bandsOf(docs: DataFrame)(seg: Path): Unit =
+    DedupQueries.bandRows(docs.select(col("doc_id"), col("text"))).write.parquet(seg.toString)
 
   /** The archive half of the harness split (the rest is the "new
     * crawl batch" probed against this index). */
@@ -74,146 +69,66 @@ object MinHashIndexStore {
   def loadOrBuild(spark: SparkSession, dir: String): DataFrame = {
     sweepSuperseded(dir)
     // session-cached count (one stamp job per dir/session; the archive
-    // variant stamps the FILTERED view). Segment accounting stays
-    // count-based: absorb's covered docs are caller-owned and need not
-    // exist in the table, so only the additive row count is summable
-    // against the manifest here.
+    // variant stamps the FILTERED view)
     val n = CorpusStamp.of(spark, dir, "documents", "doc_id",
       variant = "archive", frame = Some(archiveDocs(spark, dir))).rows
     load(spark, dir, n).getOrElse {
-      build(spark, dir, n)
-      load(spark, dir, n).getOrElse(
-        sys.error(s"minhash index for $dir vanished between build and load"))
+      buildCount += 1
+      Sidecar.read(spark, manifest(dir).commit(n.toString)(bandsOf(archiveDocs(spark, dir))))
     }
   }
+
+  private val swept = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
   /** Reclaim sidecar files written under the SUPERSEDED
     * `minhash_archive_` name (pre-r18 string-hex bucket encoding) for
     * this dir: the r18 rename correctly prevents stale segments from
     * ever matching again, but it also means nothing would ever read —
-    * or delete — them, so they were orphaned on disk permanently
-    * (r18 ADVICE). Matches the old base, its .PTR pointer, its .v-*
-    * segment dirs and .tmp swap leftovers; the live `minhash_archive2_`
-    * family shares no name prefix with the match. */
+    * or delete — them. Matches the old base, its pointer, its segment
+    * dirs and swap leftovers; the live `minhash_archive2_` family shares
+    * no name prefix with the match. Nothing writes the old name any
+    * more, so one listing per JVM per dir suffices — not one per query. */
   private def sweepSuperseded(dir: String): Unit = {
-    val parent = baseFor(dir).getParent
-    val old = s"minhash_archive_${sane(dir)}.parquet"
-    if (Files.isDirectory(parent)) {
-      val listing = Files.list(parent)
-      try listing.forEach { q =>
-        val name = q.getFileName.toString
-        if (name == old || name.startsWith(old + "."))
-          try {
-            if (Files.isDirectory(q))
-              org.apache.commons.io.FileUtils.deleteDirectory(q.toFile)
-            else Files.deleteIfExists(q)
-          } catch { case _: java.io.IOException => () }
-      } finally listing.close()
+    val old = Sidecar.path("minhash_archive", dir, ".parquet")
+    if (swept.add(old)) {
+      val name = old.getFileName.toString
+      Sidecar.reclaim(old.getParent, n => n == name || n.startsWith(name + "."))
     }
   }
 
-  /** Manifest segments referenced by the current pointer (empty when
-    * no index exists yet). */
-  private def segments(dir: String): Vector[Path] = {
-    val base = baseFor(dir)
-    val ptr = pointerFor(base)
-    if (!Files.exists(ptr)) Vector.empty
-    else Files.readString(ptr).trim.split("\n").toVector
-      .map(_.trim).filter(_.nonEmpty).map(base.getParent.resolve(_))
-  }
-
-  private def segmentRows(p: Path): Option[Long] = {
-    val meta = p.resolve("_CORPUS_ROWS")
-    if (Files.exists(meta)) Some(Files.readString(meta).trim.toLong) else None
-  }
-
-  private[llm] def load(spark: SparkSession, dir: String, n: Long): Option[DataFrame] = {
-    val segs = segments(dir)
-    val covered = segs.map(segmentRows)
-    if (segs.isEmpty || covered.exists(_.isEmpty) || covered.flatten.sum != n) None
-    else Some(spark.read.parquet(segs.map(_.toString): _*))
-  }
-
-  /** Write one immutable segment holding `rows` band rows covering
-    * `covers` corpus documents; returns the segment dir name. */
-  private def writeSegment(dir: String, rows: DataFrame, covers: Long): String = {
-    val base = baseFor(dir)
-    Files.createDirectories(base.getParent)
-    val version = java.util.UUID.randomUUID().toString
-    val vdir = base.getParent.resolve(base.getFileName.toString + s".v-$version")
-    rows.write.parquet(vdir.toString)
-    Files.writeString(vdir.resolve("_CORPUS_ROWS"), covers.toString)
-    vdir.getFileName.toString
-  }
-
-  /** Atomically swap the manifest to `newSegs`, reclaiming segments
-    * referenced by neither the new manifest nor the immediately
-    * previous one (a concurrent session may hold a lazy DataFrame over
-    * the previous generation). */
-  private def swapManifest(dir: String, newSegs: Vector[String]): Unit = {
-    val base = baseFor(dir)
-    val ptr = pointerFor(base)
-    val previous = segments(dir).map(_.getFileName.toString)
-    val tmp = Files.createTempFile(base.getParent, ptr.getFileName.toString, ".tmp")
-    Files.writeString(tmp, newSegs.mkString("\n"))
-    Files.move(tmp, ptr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    val prefix = base.getFileName.toString + ".v-"
-    val keep = newSegs.toSet ++ previous
-    val listing = Files.list(base.getParent)
-    try listing.forEach { q =>
-      val name = q.getFileName.toString
-      if (name.startsWith(prefix) && !keep.contains(name))
-        try org.apache.commons.io.FileUtils.deleteDirectory(q.toFile)
-        catch { case _: java.io.IOException => () }
-    } finally listing.close()
-  }
-
-  private def build(spark: SparkSession, dir: String, n: Long): Unit = {
-    val seg = writeSegment(dir,
-      DedupQueries.bandRows(archiveDocs(spark, dir).select(col("doc_id"), col("text"))), n)
-    buildCount += 1
-    swapManifest(dir, Vector(seg))
-  }
+  /** The index iff its manifest covers exactly `n` documents. */
+  private[llm] def load(spark: SparkSession, dir: String, n: Long): Option[DataFrame] =
+    manifest(dir).valid(n.toString).map(Sidecar.read(spark, _))
 
   /** O(batch) index maintenance: when `accepted` (doc_id, text) docs
     * are admitted into the archive, append ONLY their band rows as a
-    * new immutable segment and swap the manifest — the existing
-    * archive is never re-signatured. Returns the updated index frame
-    * (union of all segments). The caller owns corpus-count accounting:
-    * after absorption the index covers previous-total + |accepted|
-    * documents, and [[load]] resolves against that new total. */
+    * new immutable segment covering previous-total + |accepted|
+    * documents — the existing archive is never re-signatured. Returns
+    * the updated index frame (union of all segments). */
   def absorb(spark: SparkSession, dir: String, accepted: DataFrame): DataFrame = {
-    val prevSegs = segments(dir)
-    require(prevSegs.nonEmpty, s"no index to absorb into for $dir — build first")
-    val prevTotal = prevSegs.flatMap(segmentRows).sum
-    val nNew = accepted.count()
-    val seg = writeSegment(dir,
-      DedupQueries.bandRows(accepted.select(col("doc_id"), col("text"))), nNew)
+    val m = manifest(dir)
+    val (prevSegs, covered) = m.tip.getOrElse(
+      sys.error(s"no index to absorb into for $dir — build first"))
+    val segs = m.commit((covered.toLong + accepted.count()).toString, prevSegs)(bandsOf(accepted))
     absorbCount += 1
-    swapManifest(dir, prevSegs.map(_.getFileName.toString) :+ seg)
-    load(spark, dir, prevTotal + nNew).getOrElse(
-      sys.error(s"minhash index for $dir failed to resolve after absorb"))
+    Sidecar.read(spark, segs)
   }
 
-  private[llm] def segmentCount(dir: String): Int = segments(dir).size
+  private[llm] def segmentCount(dir: String): Int = manifest(dir).segments.size
 
   /** Offline compaction — fold the manifest back to ONE segment (the
     * union of all band rows; they are disjoint per covered doc, so the
-    * fold is a plain concatenation), covering the summed document
-    * count. Bounds the many-small-segments read amplification after a
-    * long absorb run; answers identical by construction. */
+    * fold is a plain concatenation), covering the same document count.
+    * Bounds the many-small-segments read amplification after a long
+    * absorb run; answers identical by construction. */
   def compact(spark: SparkSession, dir: String): DataFrame = {
-    val segs = segments(dir)
-    require(segs.nonEmpty, s"no minhash index to compact for $dir")
-    val covered = segs.flatMap(segmentRows).sum
-    if (segs.size > 1) {
-      val seg = writeSegment(dir,
-        spark.read.parquet(segs.map(_.toString): _*), covered)
-      compactCount += 1
-      swapManifest(dir, Vector(seg))
-    }
-    load(spark, dir, covered).getOrElse(
-      sys.error(s"minhash index for $dir failed to resolve after compact"))
+    val m = manifest(dir)
+    val (segs, covered) = m.tip.getOrElse(sys.error(s"no minhash index to compact for $dir"))
+    Sidecar.read(spark,
+      if (segs.size == 1) segs
+      else {
+        compactCount += 1
+        m.commit(covered)(seg => Sidecar.read(spark, segs).write.parquet(seg.toString))
+      })
   }
 }

@@ -2,12 +2,9 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
-/** Trained Naive Bayes language-ID model with the sidecar discipline
-  * ([[LrModel]]/[[CodebookStore]]/[[BpeModel]]): train ONCE per corpus
-  * stamp, persist, restart = zero training jobs.
+/** Trained Naive Bayes language-ID model persisted as [[Sidecar]]s:
+  * train ONCE per corpus stamp, persist, restart = zero training jobs.
   *
   * Before round 16 `text_nb_langid` re-derived the model (per-(lang,
   * word) counts), vocabulary size, per-language totals and priors from
@@ -19,14 +16,12 @@ import scala.jdk.CollectionConverters._
   *
   * What persists:
   *  - the add-one-smoothed log-count model `(l, w, lnp)` — a
-  *    Heaps-bounded (vocabulary-sized) parquet directory committed via
-  *    the versioned-dir + atomically-renamed pointer swap (the
-  *    [[PqStore.saveCodes]] / StateStore pattern), so a reader never
-  *    races a replacement through a delete window;
-  *  - the |L|-row per-language constants `(l, lnprior, lnz)` — a TSV
-  *    with the corpus stamp in its header (the [[LrModel]] shape),
-  *    decimals serialized via toPlainString so the 6-dp scale
-  *    round-trips exactly.
+  *    Heaps-bounded (vocabulary-sized) parquet table committed as a
+  *    one-segment manifest, so a reader never races a replacement
+  *    through a delete window;
+  *  - the |L|-row per-language constants `(l, lnprior, lnz)` — a
+  *    stamped TSV, decimals serialized via toPlainString so the 6-dp
+  *    scale round-trips exactly.
   *
   * Training is a deterministic function of the corpus (integer counts
   * → ln → 6-dp decimal snap), so the DuckDB oracle keeps deriving the
@@ -53,84 +48,6 @@ object NbModel {
     * restart spec pins that a second session loads the sidecar
     * instead of bumping this. */
   @volatile var trainCount: Long = 0L
-
-  private def sane(dir: String) = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def modelBase(dir: String): Path =
-    CodebookStore.indexRoot.resolve(s"nb_model_${sane(dir)}.parquet")
-
-  private def constsFile(dir: String): Path =
-    CodebookStore.indexRoot.resolve(s"nb_consts_${sane(dir)}.tsv")
-
-  private def pointerFor(base: Path): Path =
-    base.getParent.resolve(base.getFileName.toString + ".PTR")
-
-  // ----- persistence ------------------------------------------------
-
-  private def saveModel(model: DataFrame, dir: String, stamp: String): Unit = {
-    val base = modelBase(dir)
-    Files.createDirectories(base.getParent)
-    val version = java.util.UUID.randomUUID().toString
-    val vdir = base.getParent.resolve(base.getFileName.toString + s".v-$version")
-    model.write.parquet(vdir.toString)
-    Files.writeString(vdir.resolve("_CORPUS_ROWS"), stamp)
-    val ptr = pointerFor(base)
-    val previous =
-      if (Files.exists(ptr)) Some(Files.readString(ptr).trim).filter(_.nonEmpty)
-      else None
-    val tmp = Files.createTempFile(base.getParent, ptr.getFileName.toString, ".tmp")
-    Files.writeString(tmp, vdir.getFileName.toString)
-    Files.move(tmp, ptr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    val prefix = base.getFileName.toString + ".v-"
-    val keep = Set(vdir.getFileName.toString) ++ previous
-    val listing = Files.list(base.getParent)
-    try listing.forEach { q =>
-      val name = q.getFileName.toString
-      if (name.startsWith(prefix) && !keep.contains(name))
-        try org.apache.commons.io.FileUtils.deleteDirectory(q.toFile)
-        catch { case _: java.io.IOException => () }
-    } finally listing.close()
-  }
-
-  private def loadModel(spark: SparkSession, dir: String,
-      stamp: String): Option[DataFrame] = {
-    val base = modelBase(dir)
-    val ptr = pointerFor(base)
-    val resolved =
-      if (Files.exists(ptr)) Some(base.getParent.resolve(Files.readString(ptr).trim))
-      else None
-    resolved.filter { p =>
-      val meta = p.resolve("_CORPUS_ROWS")
-      Files.exists(meta) && Files.readString(meta).trim == stamp
-    }.map(p => spark.read.parquet(p.toString))
-  }
-
-  private def saveConsts(dir: String, stamp: String, cs: Vector[LangConst]): Unit = {
-    val p = constsFile(dir)
-    Files.createDirectories(p.getParent)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    val lines = s"#corpus_stamp=$stamp" +: cs.map(c =>
-      s"${c.l}\t${c.lnprior.toPlainString}\t${c.lnz.toPlainString}")
-    Files.write(tmp, lines.asJava)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def loadConsts(dir: String, stamp: String): Option[Vector[LangConst]] = {
-    val p = constsFile(dir)
-    if (!Files.exists(p)) None
-    else {
-      val lines = Files.readAllLines(p).asScala.toVector
-      if (!lines.headOption.contains(s"#corpus_stamp=$stamp")) None
-      else Some(lines.tail.map { line =>
-        val Array(l, pr, z) = line.split("\t", 3)
-        LangConst(l, new java.math.BigDecimal(pr), new java.math.BigDecimal(z))
-      })
-    }
-  }
-
-  // ----- training ---------------------------------------------------
 
   /** The training pass over the seed slice: the per-(lang, word)
     * add-one log counts and the |L|-row constants. One place owns the
@@ -172,18 +89,23 @@ object NbModel {
     * the corpus) and the |L| per-language constants. */
   def loadOrTrain(spark: SparkSession, dir: String): (DataFrame, Vector[LangConst]) = {
     val stamp = CorpusStamp.of(spark, dir, "documents", "doc_id").token
-    (loadModel(spark, dir, stamp), loadConsts(dir, stamp)) match {
-      case (Some(m), Some(c)) => (m, c)
+    val m = new Sidecar.Manifest(Sidecar.path("nb_model", dir, ".parquet"))
+    val constsFile = Sidecar.path("nb_consts", dir, ".tsv")
+    // the PERSISTED frame either way, so first-train and restart
+    // sessions score through the identical plan (a parquet scan)
+    (m.valid(stamp), Sidecar.readTsv(constsFile, stamp)) match {
+      case (Some(segs), Some(lines)) =>
+        (Sidecar.read(spark, segs), lines.map { line =>
+          val Array(l, pr, z) = line.split("\t", 3)
+          LangConst(l, new java.math.BigDecimal(pr), new java.math.BigDecimal(z))
+        })
       case _ =>
         val (model, consts) = train(spark, dir)
         trainCount += 1
-        saveModel(model, dir, stamp)
-        saveConsts(dir, stamp, consts)
-        // hand back the PERSISTED frame so first-train and restart
-        // sessions score through the identical plan (a parquet scan)
-        (loadModel(spark, dir, stamp)
-          .getOrElse(sys.error(s"nb model sidecar write failed for $dir")),
-          consts)
+        val segs = m.commit(stamp)(seg => model.write.parquet(seg.toString))
+        Sidecar.writeTsv(constsFile, stamp, consts.map(c =>
+          s"${c.l}\t${c.lnprior.toPlainString}\t${c.lnz.toPlainString}"))
+        (Sidecar.read(spark, segs), consts)
     }
   }
 }

@@ -1090,11 +1090,6 @@ object SimilarityQueries {
     pqTrained.clear(); pqCodes.clear(); lastPqDir = None
   }
 
-  /** Session-cached corpus stamp (count + id-set hash) keying the PQ
-    * sidecars — one stamp job per (dir, session), see [[CorpusStamp]]. */
-  private def pqCorpusStamp(spark: SparkSession, dir: String): String =
-    CorpusStamp.of(spark, dir, "embeddings", "vec_id").token
-
   /** Unit-normalized vectors with their per-subspace slices exploded to
     * (vec_id, j, sub) — the shared shape of training, encoding, and the
     * query LUT. */
@@ -1121,18 +1116,10 @@ object SimilarityQueries {
 
   private def pqCodebook(
       spark: SparkSession, dir: String): Vector[(Int, Long, Vector[Double])] = {
-    val cb = pqTrained.computeIfAbsent(dir, d => {
-      // memory cache -> persisted index file -> train-once (the
-      // CodebookStore discipline; see PqStore for the restart/scale
-      // rationale)
-      val stamp = pqCorpusStamp(spark, d)
-      PqStore.loadCodebook(d, PqM, PqK, stamp).getOrElse {
-        val trained = pqTrain(spark, d)
-        PqStore.trainCount += 1
-        PqStore.saveCodebook(d, PqM, PqK, stamp, trained)
-        trained
-      }
-    })
+    // memory cache -> persisted index file -> train-once (see PqStore
+    // for the restart/scale rationale)
+    val cb = pqTrained.computeIfAbsent(dir,
+      d => PqStore.loadOrTrain(spark, d, PqM, PqK)(pqTrain(spark, d)))
     lastPqDir = Some(dir)
     cb
   }
@@ -1208,59 +1195,35 @@ object SimilarityQueries {
   }
 
   private def pqEncodedCorpus(spark: SparkSession, dir: String): DataFrame =
+    // memory cache -> persisted parquet code table -> encode-once: the
+    // encode is a full corpus pass (N x M x K rounded distances),
+    // exactly what a restart must NOT silently repeat at 100 TB
     pqCodes.computeIfAbsent((spark, dir), { case (s, d) =>
-      // memory cache -> persisted parquet code table -> encode-once:
-      // the encode is a full corpus pass (N x M x K rounded distances),
-      // exactly what a restart must NOT silently repeat at 100 TB
-      val stamp = pqCorpusStamp(s, d)
-      PqStore.loadCodes(s, d, PqM, PqK, stamp).getOrElse {
-        val encoded = pqEncodeFrame(s, d, Tables.table(s, d, "embeddings"))
-        PqStore.encodeCount += 1
-        PqStore.saveCodes(encoded, d, PqM, PqK, stamp)
-        PqStore.loadCodes(s, d, PqM, PqK, stamp).getOrElse(
-          sys.error(s"pq code table write at ${d} did not land"))
-      }
+      PqStore.loadOrEncode(s, d, PqM, PqK)(pqEncodeFrame(s, d, _))
     })
 
-  /** Bootstrap/test hook (the KnnGraphStore.buildBaseFor shape):
-    * encode + persist ONLY `subset` of dir's corpus — recording
-    * SUBSET's stamp — against dir's trained codebook. This is the base
-    * state a [[pqAbsorb]] then extends; the equality spec seeds it
-    * with the pre-arrival half of a corpus. */
+  /** Bootstrap/test hook: persist the PQ codes of ONLY `subset` of
+    * dir's corpus ([[PqStore.encodeBase]]) — the base state a
+    * [[pqAbsorb]] then extends. */
   private[llm] def pqEncodeBaseFor(spark: SparkSession, dir: String,
       subset: DataFrame): Unit = {
-    val st = subset.agg(count(lit(1)),
-      coalesce(sum(hash(col("vec_id")).cast("long")), lit(0L))).head()
-    PqStore.encodeCount += 1
-    PqStore.saveCodes(pqEncodeFrame(spark, dir, subset), dir, PqM, PqK,
-      CorpusStamp.Stamp(st.getLong(0), st.getLong(1)).token)
+    PqStore.encodeBase(dir, PqM, PqK, subset)(pqEncodeFrame(spark, dir, _))
     pqCodes.remove((spark, dir))
   }
 
   /** O(batch) incremental PQ index maintenance (r15 verdict #6):
     * `batch` (vec_id, embedding) vectors have LANDED in dir's
-    * embeddings table; encode ONLY them against the frozen codebook
-    * and append the codes as an LSM delta segment — the existing
-    * corpus's codes are immutable under a frozen codebook, so unlike
-    * the kNN graph there is no re-rank half at all: absorb ≡ full
-    * re-encode EXACTLY (PqAbsorbSpec pins the code-set equality). The
-    * cumulative stamp is additive (prev + stamp(batch)), so it equals
-    * the merged table's live stamp and every reader — including
-    * `sim_pq_topk` — resolves the absorbed index with zero rebuild.
-    * A codebook retrain event is by definition a rebuild event (the
-    * KnnGraphStore lifecycle contract). */
+    * embeddings table; [[PqStore.absorb]] encodes ONLY them against the
+    * frozen codebook as a delta segment — the existing corpus's codes
+    * are immutable under a frozen codebook, so unlike the kNN graph
+    * there is no re-rank half at all: absorb ≡ full re-encode EXACTLY
+    * (PqAbsorbSpec pins the code-set equality), and every reader —
+    * including `sim_pq_topk` — resolves the absorbed index with zero
+    * rebuild. */
   def pqAbsorb(spark: SparkSession, dir: String, batch: DataFrame): DataFrame = {
-    val prev = PqStore.recordedCodesStamp(dir, PqM, PqK).getOrElse(
-      sys.error(s"no pq code table to absorb into for $dir — encode first"))
-    val Array(prevRows, prevFp) = prev.split(":").map(_.toLong)
-    val st = batch.agg(count(lit(1)),
-      coalesce(sum(hash(col("vec_id")).cast("long")), lit(0L))).head()
-    val cumulative = CorpusStamp.Stamp(
-      prevRows + st.getLong(0), prevFp + st.getLong(1)).token
-    PqStore.absorbCodes(pqEncodeFrame(spark, dir, batch), dir, PqM, PqK, cumulative)
+    val codes = PqStore.absorb(spark, dir, PqM, PqK, batch)(pqEncodeFrame(spark, dir, _))
     pqCodes.remove((spark, dir))
-    PqStore.loadCodes(spark, dir, PqM, PqK, cumulative).getOrElse(
-      sys.error(s"pq code table for $dir failed to resolve after absorb"))
+    codes
   }
 
   private def pqTopK(spark: SparkSession, dir: String): DataFrame = {

@@ -33,6 +33,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * pointer recording the applied batchId — a foreachBatch replay after
   * a crash/restart sees batchId ≤ applied and SKIPS (idempotent
   * at-least-once; the spec kills a stream mid-run and re-delivers).
+  * Each swap reclaims every segment but the new and the previous one,
+  * so the dir holds at most two however long the stream runs.
   *
   * Scale shape: one user_id exchange per trigger (the keyed-state
   * shuffle every CDC fold pays); state O(users); deltas O(changed
@@ -126,8 +128,8 @@ object StreamIncrAgg {
   def mergeBatch(
       spark: SparkSession, dir: String, batchDeltas: DataFrame, batchId: Long): Unit = {
     Files.createDirectories(Paths.get(dir))
-    val applied = readPointer(dir).map(_._2).getOrElse(-1L)
-    if (batchId <= applied) return
+    val prior = readPointer(dir)
+    if (batchId <= prior.fold(-1L)(_._2)) return
     val merged = readAgg(spark, dir)
       .unionByName(batchDeltas
         .groupBy(col("g"))
@@ -143,6 +145,9 @@ object StreamIncrAgg {
     Files.move(tmp, pointer(dir),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
+    // one-generation keep (the index sidecars' rule): a concurrent
+    // reader may still scan the previous segment; every older one goes
+    val keep = Set(seg) ++ prior.map(_._1)
+    graft.llm.Sidecar.reclaim(Paths.get(dir), n => n.startsWith("agg-") && !keep(n))
   }
 }

@@ -134,5 +134,22 @@ class StreamIncrAggSpec extends AnyFunSuite {
     assert(after === applied, "replayed batchId must be skipped")
   }
 
+  test("mergeBatch reclaims old segments: 5 batches leave at most 2, view unchanged") {
+    import spark.implicits._
+    val aggDir = Files.createTempDirectory("sincr-gc").toString + "/agg"
+    var previous = StreamIncrAgg.readAgg(spark, aggDir)
+    (0 until 5).foreach { id =>
+      previous = StreamIncrAgg.readAgg(spark, aggDir) // lazy over the pre-swap segment
+      val ds = Seq(Delta("a", 1L, 10L * id), Delta(s"t$id", 1L, id.toLong))
+      StreamIncrAgg.mergeBatch(spark, aggDir, ds.toDF(), id.toLong)
+    }
+    val segs = new java.io.File(aggDir).list().filter(_.startsWith("agg-"))
+    assert(segs.length <= 2, s"segments left: ${segs.toSeq}")
+    val view = StreamIncrAgg.readAgg(spark, aggDir)
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(view === Map("a" -> ((5L, 100L))) ++ (0 until 5).map(i => s"t$i" -> ((1L, i.toLong))))
+    assert(previous.count() === 5L, "the previous generation must stay readable")
+  }
+
   private def eventually(body: => Unit): Unit = body
 }

@@ -2,25 +2,32 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Dev-only streaming-throughput probe: pushes the sf events table,
-  * converted to oplog form, through the FULL tail phase (P3 filters →
-  * compact → dispatch → LWW MERGE into state) as one Structured
-  * Streaming run, and prints events/second end-to-end — the number
-  * that compares directly against the reference's 10,000 docs/s
-  * read-capacity ceiling (BASELINE.md §1).
+/** Dev-only streaming-throughput probe for the two state backends: per
+  * run, seeds a fresh state from the sf events' source snapshot through
+  * [[graft.pipeline.ScanJob.backfill]] (so the bucketed store gets its
+  * snapshot-sized bucket count), then drains every event, converted to
+  * oplog form and split by ts into `triggers` files, through the FULL
+  * tail phase one file per trigger. Prints one JSON line per run: tail
+  * events/second, tail wall, the seed wall, and the per-trigger
+  * `triggerExecution` p50/p95/max — the numbers that compare against
+  * the reference's 10,000 docs/s read-capacity ceiling (BASELINE.md §1).
   *
-  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.tools.TailThroughput /root/testdata/sf0.1 [legacy|bucketed]"
+  * Mode `both` alternates the two backends, swapping which runs first
+  * every pair, so ambient drift hits both sides alike.
+  *
+  * Run: SPARK_GRAFT_CPUS=4 SPARK_GRAFT_TP_RUNS=3 sbt "Test/runMain
+  * graft.tools.TailThroughput <sfDir> [legacy|bucketed|both] [triggers]"
   */
 object TailThroughput {
-  private var buckets: Option[graft.cdc.BucketedStateStore.Spec] = None
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val mode = args.lift(1).getOrElse("legacy")
-    buckets =
-      if (mode == "bucketed") Some(graft.cdc.BucketedStateStore.Spec()) else None
+    val mode = args.lift(1).getOrElse("both")
+    val triggers = args.lift(2).map(_.toInt).getOrElse(20)
+    val modes = if (mode == "both") Seq("legacy", "bucketed") else Seq(mode)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -41,47 +48,67 @@ object TailThroughput {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val events = graft.ops.Tables.events(spark, sfDir)
     val base = Files.createTempDirectory("tail_tp").toString
-    // build the oplog projection once: write it, then derive the count
-    // and the warm-up slice from the written files
-    graft.source.EventsOplog.fromEvents(graft.ops.Tables.events(spark, sfDir))
-      .repartition(cpus.toInt).write.parquet(s"$base/in")
+    // the oplog in `triggers` ts ranges, written once: one file per
+    // trigger, so every trigger carries its share of the backlog
+    graft.source.EventsOplog.fromEvents(events)
+      .repartitionByRange(triggers, col("ts")).write.parquet(s"$base/in")
+    val snapshot = s"$base/snapshot"
+    graft.source.EventsOplog.sourceSnapshot(events).write.parquet(snapshot)
     val written = spark.read.parquet(s"$base/in")
     val n = written.count()
 
     // warm codegen/classloading on a copy of the pipeline so the timed
-    // run measures throughput, not one-time JIT (same rationale as Bench)
+    // runs measure throughput, not one-time JIT (same rationale as Bench)
     val warmBase = Files.createTempDirectory("tail_tp_warm").toString
     written.limit(1000).repartition(1).write.parquet(s"$warmBase/in")
-    runOnce(spark, warmBase)
+    modes.foreach(m => runOnce(spark, warmBase, spark.read.parquet(snapshot).limit(100),
+      Files.createTempDirectory("tail_tp_warm_state").toString, m))
 
     // >=1 timed runs, an ambient-IO probe point before each (r14
     // verdict #5: throughput numbers are only comparable across windows
     // at similar probe rates — record them alongside, the Bench rule)
     val runs = sys.env.getOrElse("SPARK_GRAFT_TP_RUNS", "1").toInt.max(1)
     (1 to runs).foreach { r =>
-      val probe = graft.ops.IoProbe.mbps()
-      // fresh state/checkpoint per run: each run is a full cold tail
-      val runBase = Files.createTempDirectory(s"tail_tp_run$r").toString
-      val t0 = System.nanoTime()
-      runOnce(spark, base, runBase)
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"metric":"tail_events_per_sec","value":${n / sec}%.0f,"events":$n,"wall_sec":$sec%.3f,"run":$r,"io_probe_mbps":$probe%.1f,"mode":"$mode","sf":"$sfDir"}""")
+      val order = if (r % 2 == 1) modes else modes.reverse
+      order.foreach { m =>
+        val probe = graft.ops.IoProbe.mbps()
+        // fresh state/checkpoint per run: each run is a full cold backfill + tail
+        val runBase = Files.createTempDirectory(s"tail_tp_run$r").toString
+        val t = runOnce(spark, base, spark.read.parquet(snapshot), runBase, m)
+        println(f"""{"metric":"tail_events_per_sec","value":${n / t.tailSec}%.0f,"events":$n,"wall_sec":${t.tailSec}%.3f,"seed_sec":${t.seedSec}%.3f,"triggers":${t.ms.size},"trigger_p50_ms":${t.pct(0.5)},"trigger_p95_ms":${t.pct(0.95)},"trigger_max_ms":${t.pct(1.0)},"buckets":${t.buckets},"run":$r,"io_probe_mbps":$probe%.1f,"mode":"$m","sf":"$sfDir"}""")
+      }
     }
     spark.stop()
   }
 
-  private def runOnce(spark: SparkSession, base: String,
-      stateBase: String = ""): Unit = {
-    val sb = if (stateBase.isEmpty) base else stateBase
+  private final case class Timing(seedSec: Double, tailSec: Double, ms: Vector[Long], buckets: Int) {
+    def pct(q: Double): Long = ms.sorted.apply(math.ceil(q * ms.size).toInt.max(1) - 1)
+  }
+
+  private def runOnce(spark: SparkSession, base: String, snapshot: DataFrame,
+      stateBase: String, mode: String): Timing = {
+    val buckets =
+      if (mode == "bucketed") Some(graft.cdc.BucketedStateStore.Spec()) else None
+    val stateDir = s"$stateBase/state"
+    val t0 = System.nanoTime()
+    graft.pipeline.ScanJob.backfill(snapshot, graft.SparkEntry.flagshipTask, stateDir, buckets)
+    val t1 = System.nanoTime()
     val stream = spark.readStream.schema(graft.source.v2.OplogJsonTable.SCHEMA)
       .option("recursiveFileLookup", "true")
+      .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
     val q = graft.pipeline.TailQuery.start(
       stream, graft.SparkEntry.flagshipTask, ns = "app.users", fromTs = 0L,
-      stateDir = s"$sb/state", checkpointDir = s"$sb/ckpt",
+      stateDir = stateDir, checkpointDir = s"$stateBase/ckpt",
       triggerMs = 100L, buckets = buckets)
     q.processAllAvailable()
+    val t2 = System.nanoTime()
+    val ms = q.recentProgress.toVector.filter(_.numInputRows > 0)
+      .map(_.durationMs.get("triggerExecution").longValue)
     q.stop()
+    Timing((t1 - t0) / 1e9, (t2 - t1) / 1e9, ms,
+      graft.cdc.BucketedStateStore.readManifest(stateDir).map(_.nBuckets).getOrElse(0))
   }
 }
