@@ -30,7 +30,8 @@ final case class ApplyRow(
   * batch apply is a single hash shuffle + one linear pass per key, with
   * O(events-per-key) group memory. The bucketed store hands in only
   * the prior rows of the batch's keys, so the shuffle stays O(batch)
-  * whatever the state's size.
+  * whatever the state's size, and restricts the source snapshot to the
+  * batch's keys the same way.
   *
   * Semantics are inherited verbatim from the pure core: the per-key fold
   * is `mergeOplogs` -> `dispatch` -> ts-guarded LWW against the existing
@@ -42,8 +43,12 @@ object BatchApplier {
   /** Apply one compacted-or-raw oplog micro-batch onto the state.
     * @param events raw events of ONE namespace (run P3 filters first)
     * @param state  current state (id, doc, parent, ts)
-    * @param source optional source snapshot (id, doc) — the Mongo
-    *               fallback for updates to never-seen keys
+    * @param source optional source snapshot (id, doc[, ts]) — the Mongo
+    *               fallback for updates to never-seen keys. Only the
+    *               batch's keys matter (a key without events emits
+    *               nothing), so callers holding a large snapshot pass it
+    *               restricted to the batch
+    *               ([[BucketedStateStore.restrictSource]])
     * @param dropped optional accumulator counting events discarded by
     *               the per-event error contract (malformed JSON, failed
     *               dispatch) — the engine's side-output form of the
@@ -57,9 +62,8 @@ object BatchApplier {
       task: TaskSpec,
       source: Option[DataFrame] = None,
       dropped: Option[org.apache.spark.util.LongAccumulator] = None,
-      batchKeyCount: Option[Long] = None,
   ): DataFrame =
-    applyOplogBatchKeepDeletes(events, state, task, source, dropped, batchKeyCount)
+    applyOplogBatchKeepDeletes(events, state, task, source, dropped)
       .filter(col("action") =!= "delete")
       .drop("action")
 
@@ -76,7 +80,6 @@ object BatchApplier {
       task: TaskSpec,
       source: Option[DataFrame] = None,
       dropped: Option[org.apache.spark.util.LongAccumulator] = None,
-      batchKeyCount: Option[Long] = None,
   ): DataFrame = {
     val spark = events.sparkSession
     implicit val applyEnc = Encoders.product[ApplyRow]
@@ -87,53 +90,12 @@ object BatchApplier {
       col("doc"), col("parent"), lit(false).as("fromMigrate")).as[ApplyRow]
     // a source snapshot may arrive undeduplicated (multiple versions per
     // key, each with its ts) — the earliest wins in-group, so callers
-    // need no separate window pass to dedup it first. The snapshot is
-    // semi-joined down to the BATCH's keys before the union: a key with
-    // source rows but no event emits nothing from the fold, so the
-    // filter is a semantic no-op — and it turns an O(source)-per-trigger
-    // union (the snapshot can be the whole 100 TB collection) into
-    // O(batch), with the snapshot scan streaming through a broadcast
-    // hash join instead of entering the shuffle.
+    // need no separate window pass to dedup it first
     val sourceRows = source.map { src =>
       val srcTs = if (src.columns.contains("ts")) col("ts") else lit(0L)
-      // The key set only FILTERS the snapshot, so the operator is a
-      // LEFT SEMI join — never an inner join against a distinct()-ed
-      // frame. That choice matters twice at scale: semi never duplicates
-      // a snapshot row however the key side arrives, and on the
-      // oversized-trigger path below it keeps the key side a PLAIN
-      // exchange (no post-shuffle distinct aggregate), which is the
-      // shape AQE's OptimizeSkewedJoin pattern-matches — a hot document
-      // with an undeduplicated version pile-up gets its partition
-      // skew-split at runtime (pinned by MultiBatchPropertySpec).
-      //
-      // The forced broadcast is capped exactly like the bucketed store's
-      // point lookup: a catch-up storm batch can hold millions of
-      // distinct keys — hundreds of MB resident on every executor — so
-      // above the cap the planner picks the join and the snapshot merely
-      // shuffles for that oversized trigger. Callers that already hold
-      // a bound on the distinct-key count (the legacy tail passes the
-      // batch's row count, the bucketed apply a padded HLL estimate)
-      // pass it through, and the key side is the
-      // batch's RAW ids: a semi join needs no distinct, so no aggregate
-      // shuffle precedes the broadcast, and above the cap it is the PLAIN
-      // raw-id exchange AQE's OptimizeSkewedJoin pattern-matches (pinned
-      // by MultiBatchPropertySpec). Otherwise the distinct-key frame is
-      // PINNED and counted — the count job and the broadcast build then
-      // share ONE id-derivation pass over the batch instead of each
-      // re-deriving it (probed at sf0.1: the separate count job alone
-      // cost ~0.2 s of cdc_pipeline_state's ~0.8 s, guide §1.4/§5).
-      val (nKeys, pinnedKeys) = batchKeyCount match {
-        case Some(n) => (n, None)
-        case None =>
-          val keys = events.select(col("id")).distinct().localCheckpoint()
-          (keys.count(), Some(keys.toDF))
-      }
-      val ids = pinnedKeys.getOrElse(events.select(col("id")))
-      val keyJoin = if (nKeys <= BucketedStateStore.BroadcastKeyLimit) broadcast(ids) else ids
-      src.join(keyJoin, Seq("id"), "left_semi")
-        .select(
-          col("id"), lit(1).as("kind"), srcTs.as("ts"), lit("").as("op"), lit("").as("ns"),
-          col("doc"), lit(null: String).as("parent"), lit(false).as("fromMigrate")).as[ApplyRow]
+      src.select(
+        col("id"), lit(1).as("kind"), srcTs.as("ts"), lit("").as("op"), lit("").as("ns"),
+        col("doc"), lit(null: String).as("parent"), lit(false).as("fromMigrate")).as[ApplyRow]
     }
     val eventRows = events.select(
       col("id"), lit(2).as("kind"), col("ts"), col("op"), col("ns"),

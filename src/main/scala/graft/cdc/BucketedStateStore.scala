@@ -390,7 +390,9 @@ object BucketedStateStore {
   def priorFor(spark: SparkSession, dir: String, keys: DataFrame): DataFrame =
     readManifest(dir) match {
       case None => StateStore.empty(spark)
-      case Some(m) => lookup(spark, dir, m, keys, batchStats(m.nBuckets, keys, Cdc), Cdc)
+      case Some(m) =>
+        val st = batchStats(m.nBuckets, keys, Cdc)
+        lookup(spark, dir, m, batchKeys(keys, Cdc.key, st.keys), st, Cdc)
     }
 
   /** One tiny aggregate over the batch: its row count, a bound on its
@@ -414,32 +416,43 @@ object BucketedStateStore {
     BatchStats(rows, keys, row.getSeq[Int](2).toSet, row.get(3), row.get(4))
   }
 
-  /** Above this many distinct batch keys the point-lookup stops forcing
-    * a broadcast (a catch-up storm batch could be millions of keys —
-    * hundreds of MB on every executor) and lets the planner pick the
-    * join; correctness is unchanged, the state side merely shuffles for
-    * that oversized trigger. */
-  private[graft] val BroadcastKeyLimit = 500000L
+  /** Above this many distinct batch keys the key side stops forcing a
+    * broadcast (a catch-up storm batch could be millions of keys —
+    * hundreds of MB on every executor); the other side then merely
+    * shuffles for that oversized trigger. */
+  private val BroadcastKeyLimit = 500000L
 
-  /** The rows of `m` for the batch keys in `batch` (its key column is
-    * read; every other column is dropped). The lookup is a LEFT SEMI
-    * join against the batch's raw keys: a semi join never duplicates a
-    * state row however often a key repeats in the batch, so the key side
-    * needs no distinct aggregate — no shuffle before the broadcast (the
-    * fold's source semi join keys the same way). */
+  /** The key side of a batch's point lookups (the state lookup and
+    * [[restrictSource]]): the batch's RAW `key` column, broadcast while
+    * `bound` — an upper bound on its distinct keys — is under the cap.
+    * Both consumers are LEFT SEMI joins, which never duplicate a row
+    * however often a key repeats, so no distinct aggregate (no shuffle)
+    * precedes the broadcast, and above the cap the key side is the PLAIN
+    * exchange AQE's OptimizeSkewedJoin pattern-matches (pinned by
+    * MultiBatchPropertySpec). */
+  private[graft] def batchKeys(batch: DataFrame, key: String, bound: Long): DataFrame = {
+    val keys = batch.select(col(key))
+    if (bound <= BroadcastKeyLimit) broadcast(keys) else keys
+  }
+
+  /** A source snapshot cut down to a [[batchKeys]] key side: O(batch)
+    * rows into the fold instead of O(source), and a semantic no-op,
+    * since a key without events emits nothing from the fold. */
+  private[graft] def restrictSource(source: DataFrame, keys: DataFrame): DataFrame =
+    source.join(keys, Seq("id"), "left_semi")
+
+  /** The rows of `m` for the batch keys in `keys` (a [[batchKeys]]
+    * frame): a LEFT SEMI join over the dirty buckets' files, with the
+    * batch's key range pushed to parquet. */
   private[graft] def lookup(
       spark: SparkSession, dir: String, m: Manifest,
-      batch: DataFrame, st: BatchStats, l: Layout): DataFrame = {
+      keys: DataFrame, st: BatchStats, l: Layout): DataFrame = {
     val paths = m.livePathsFor(dir, st.dirty)
     if (paths.isEmpty || st.lo == null) l.empty(spark)
-    else {
-      val keys = batch.select(col(l.key))
-      val keySide = if (st.keys <= BroadcastKeyLimit) broadcast(keys) else keys
-      resolve(
-        scanBuckets(spark, dir, m, st.dirty, l)
-          .filter(col(l.key) >= lit(st.lo) && col(l.key) <= lit(st.hi))
-          .join(keySide, Seq(l.key), "left_semi"), l)
-    }
+    else resolve(
+      scanBuckets(spark, dir, m, st.dirty, l)
+        .filter(col(l.key) >= lit(st.lo) && col(l.key) <= lit(st.hi))
+        .join(keys, Seq(l.key), "left_semi"), l)
   }
 
   /** The store is SINGLE-WRITER by contract (one streaming query owns a
@@ -561,9 +574,10 @@ object BucketedStateStore {
     val st = batchStats(m.nBuckets, batch, Cdc)
     if (st.rows == 0) None
     else {
-      val prior = lookup(spark, dir, m, batch, st, Cdc)
+      val keys = batchKeys(batch, Cdc.key, st.keys)
+      val prior = lookup(spark, dir, m, keys, st, Cdc)
       val applied0 = BatchApplier.applyOplogBatchKeepDeletes(
-        events, prior, task, source, dropped, batchKeyCount = Some(st.keys))
+        events, prior, task, source.map(restrictSource(_, keys)), dropped)
       val applied = if (onOutcomes.isDefined) applied0.persist() else applied0
       try {
         val r = commitOn(m, applied, dir, spec, st.dirty, target, Cdc, None)

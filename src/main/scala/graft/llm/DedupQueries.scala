@@ -715,9 +715,6 @@ object DedupQueries {
   private val labelCache =
     new java.util.concurrent.ConcurrentHashMap[(String, SparkSession), DataFrame]()
 
-  /** Test hook: drop the cached labelings (a "restarted session"). */
-  private[llm] def resetLabelCache(): Unit = labelCache.clear()
-
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     labelCache.computeIfAbsent((dir, spark),
       (k: (String, SparkSession)) => clusterLabelsBuild(k._2, k._1))

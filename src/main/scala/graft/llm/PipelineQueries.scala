@@ -448,16 +448,18 @@ object PipelineQueries {
     // strategy for a normal hit population (A/B'd at sf10: 9.35 s
     // broadcast vs 9.97 SMJ), but the hit-word count is
     // O(candidates · doc len) and candidates scale with the batch, so
-    // the hint is GUARDED by a measured count over the pinned frame
-    // (r18 ADVICE): one cheap job on the checkpointed archW, and a
-    // storm batch whose hit words outgrow the cap falls back to the
-    // planner instead of OOMing every executor.
+    // the hint is GUARDED in bytes by one cheap aggregate over the
+    // checkpointed archW: the exploded rows' size (24 bytes of row
+    // header, id and string slot per word, plus the word bytes) against
+    // the session's autoBroadcastJoinThreshold, so a storm batch whose
+    // hit words outgrow it falls back to the planner instead of OOMing
+    // every executor.
     val archWords = archW.select(col("a2"), explode(col("ws")).as("w2"))
-    val nArchWords =
-      archW.agg(coalesce(sum(size(col("ws"))), lit(0L))).head().getLong(0)
+    val archBytes = archW
+      .agg(coalesce(sum(size(col("ws")) * 24L + octet_length(array_join(col("ws"), ""))), lit(0L)))
+      .head().getLong(0)
     val archSide =
-      if (nArchWords <= graft.cdc.BucketedStateStore.BroadcastKeyLimit)
-        broadcast(archWords)
+      if (archBytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(archWords)
       else archWords
     val inter = batchW.select(col("b_id"), explode(col("ws")).as("w"))
       .join(broadcast(pairs), Seq("b_id"))

@@ -20,5 +20,4 @@ object ObjectId {
   // Column forms — plain built-in compositions, fully codegen'd.
   def isValidCol(c: Column): Column = c.rlike(HexRe)
   def secondsCol(c: Column): Column = conv(substring(c, 1, 8), 16, 10).cast("long")
-  def timestampCol(c: Column): Column = timestamp_seconds(secondsCol(c))
 }

@@ -25,10 +25,6 @@ object BlockGuard {
   private final case class Worst(fingerprint: Long, labels: Vector[Any], count: Long)
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Worst]()
 
-  /** Test hook: drop the session cache so a spec can pin recompute-on-
-    * changed-data behavior. */
-  private[graft] def resetForTest(): Unit = cache.clear()
-
   /** Cheap driver-side data fingerprint: max lastModified over the
     * table's file tree (fixture tables are immutable files; any rewrite
     * touches an mtime). */

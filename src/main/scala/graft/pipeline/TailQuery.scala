@@ -210,13 +210,15 @@ object TailQuery {
               if (batchRows > 0) {
                 val st = StateStore.read(spark, stateDir)
                 // fused compact+dispatch+merge: one co-grouped shuffle per
-                // batch. The row count upper-bounds the distinct-key count,
-                // so it serves as the broadcast-cap probe without the apply
-                // paying a separate distinct-count job per trigger. Delete
-                // outcomes are kept so the bulk leg sees them; the state
-                // write filters its tombstones exactly as applyOplogBatch.
+                // batch, over the source restricted to the batch's keys.
+                // The row count upper-bounds the distinct-key count, so it
+                // serves as the broadcast-cap bound without a separate
+                // distinct-count job per trigger. Delete outcomes are kept
+                // so the bulk leg sees them; the state write filters its
+                // tombstones exactly as applyOplogBatch.
+                val keys = BucketedStateStore.batchKeys(batch, "id", batchRows)
                 val outcomes0 = BatchApplier.applyOplogBatchKeepDeletes(
-                  batch.as[OplogRow], st, task, source, batchKeyCount = Some(batchRows))
+                  batch.as[OplogRow], st, task, source.map(BucketedStateStore.restrictSource(_, keys)))
                 val outcomes = if (bulk.isDefined) outcomes0.persist() else outcomes0
                 try {
                   StateStore.write(

@@ -45,12 +45,6 @@ object FsIO {
     * and credentials apply); vanilla defaults otherwise. */
   def driverConf: Configuration = graft.cdc.StateIO.hadoopConf
 
-  def fs(path: String, conf: Configuration): FileSystem =
-    new Path(path).getFileSystem(conf)
-
-  def fs(path: Path, conf: Configuration): FileSystem =
-    path.getFileSystem(conf)
-
   /** Checksum-free face of the path's filesystem. Bulk-body directories
     * are globbed by an external loader, so the `.crc` side-files Hadoop's
     * `ChecksumFileSystem` (e.g. `file:`) writes next to every file are

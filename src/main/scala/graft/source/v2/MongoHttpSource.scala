@@ -10,11 +10,11 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual}
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.model.{DBool, DInt, DObj, DStr, Json}
+import graft.model.{DInt, Json}
 
 /** The live wire-read leg (S1/S2 over HTTP) — the source counterpart of
   * [[graft.sink.BulkHttp]]: where the reference opens a MongoDB driver
@@ -39,6 +39,10 @@ import graft.model.{DBool, DInt, DObj, DStr, Json}
   *    "op":…, "ns":…, "id":…, "doc":{…}, "fromMigrate":…}`; ns/ts
   *    filters apply SERVER-side (P3, src/mongodb.ts:46-54) without
   *    moving the sequence range, so offsets are filter-independent.
+  *    The lines decode through the same [[OplogLineReader]] as the
+  *    file dumps of [[OplogJsonSource]] — one schema, one pushdown rule
+  *    ([[OplogLine.accepts]]), which also builds this query's ns/fromTs,
+  *    and one malformed-line contract.
   *  - `GET <url>/oplog/latest` — `{"seq":N}`, the tail head (the
   *    latestOffset probe; the reference's awaitData cursor analog).
   *
@@ -118,7 +122,7 @@ object MongoHttp {
     * leak thread churn across thousands of partition reads. */
   private lazy val client: HttpClient = HttpClient.newHttpClient()
 
-  /** One GET, returned as a STREAMED line iterator. Executor-side
+  /** One GET, returned as a STREAMED [[LineSource]]. Executor-side
     * (partition readers) and driver-side (latest probe) share it;
     * connection errors propagate — a dead source is a failed
     * task/trigger, which Spark retries with its own task/trigger policy
@@ -135,7 +139,7 @@ object MongoHttp {
     * explicitly. */
   private[v2] def get(url: String): Lines = new Lines(url)
 
-  private[v2] final class Lines(url: String) extends Iterator[String] with AutoCloseable {
+  private[v2] final class Lines(url: String) extends LineSource {
     private val resp = client.send(
       HttpRequest.newBuilder(URI.create(url)).GET().build(),
       HttpResponse.BodyHandlers.ofInputStream())
@@ -146,33 +150,19 @@ object MongoHttp {
       close()
       throw new java.io.IOException(s"GET $url: status ${resp.statusCode()}")
     }
-    private var nextLine: String = null
     private var closed = false
-    advance()
-    private def advance(): Unit = {
-      nextLine = if (closed) null else reader.readLine()
-      while (nextLine != null && nextLine.isEmpty) nextLine = reader.readLine()
-      if (nextLine == null) close()
+    /** The next non-empty line; null, with the stream closed, once drained. */
+    override def nextLine(): String = {
+      var l = if (closed) null else reader.readLine()
+      while (l != null && l.isEmpty) l = reader.readLine()
+      if (l == null) close()
+      l
     }
-    override def hasNext: Boolean = nextLine != null
-    override def next(): String = { val l = nextLine; advance(); l }
     override def close(): Unit = if (!closed) {
       closed = true
       try reader.close() catch { case _: java.io.IOException => () }
     }
   }
-
-  private[v2] def str(o: DObj, k: String): String = o.get(k) match {
-    case Some(DStr(s)) => s
-    case Some(other)   => other.render
-    case None          => null
-  }
-
-  private[v2] def docStr(o: DObj): String = o.get("doc").map {
-    case d: DObj => d.render
-    case DStr(s) => s
-    case other   => other.render
-  }.orNull
 }
 
 class MongoHttpTable(opts: MongoHttp.Options) extends Table with SupportsRead {
@@ -198,11 +188,8 @@ class MongoHttpScanBuilder(opts: MongoHttp.Options)
     // fromId (reference src/mongodb.ts:35-39). oplog: ns equality and
     // ts lower bounds travel as query params (src/mongodb.ts:46-54).
     val (accepted, rejected) = filters.partition {
-      case GreaterThanOrEqual("id", _: String) if opts.mode == "snapshot" => true
-      case EqualTo("ns", _: String) if opts.mode == "oplog" => true
-      case GreaterThanOrEqual("ts", _: Long) if opts.mode == "oplog" => true
-      case GreaterThan("ts", _: Long) if opts.mode == "oplog" => true
-      case _ => false
+      case GreaterThanOrEqual("id", _: String) => opts.mode == "snapshot"
+      case f => opts.mode == "oplog" && OplogLine.accepts(f)
     }
     pushed = accepted
     rejected
@@ -234,10 +221,9 @@ class MongoHttpScan(opts: MongoHttp.Options, pushed: Array[Filter], required: St
     // pushed filters (batch) and source options (stream) both feed the
     // server-side query; conjoin ts bounds into the single strongest
     // lower bound — the reader re-checks every pushed filter anyway
-    val ns = pushed.collectFirst { case EqualTo("ns", v: String) => v }.orElse(opts.ns)
-    val fromTs = (pushed.collect { case GreaterThanOrEqual("ts", v: Long) => v } ++
-      pushed.collect { case GreaterThan("ts", v: Long) => v + 1 } ++
-      opts.fromTs).maxOption
+    val where = new OplogPredicates(pushed)
+    val ns = where.ns.headOption.orElse(opts.ns)
+    val fromTs = (where.fromTs ++ opts.fromTs).maxOption
     ns.map(n => s"&ns=${java.net.URLEncoder.encode(n, "UTF-8")}").getOrElse("") +
       fromTs.map(t => s"&fromTs=$t").getOrElse("")
   }
@@ -259,7 +245,7 @@ class MongoHttpScan(opts: MongoHttp.Options, pushed: Array[Filter], required: St
     else oplogPartitions(0L, MongoHttpStream.latestSeq(opts.url))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new MongoHttpReaderFactory(opts.mode, opts.batchRows, pushed, required)
+    new MongoHttpReaderFactory(opts.batchRows, pushed, required)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     require(opts.mode == "oplog", "only mode=oplog streams")
@@ -269,13 +255,16 @@ class MongoHttpScan(opts: MongoHttp.Options, pushed: Array[Filter], required: St
 
 object MongoHttpStream {
   /** `GET /oplog/latest` → the current head sequence. */
-  def latestSeq(url: String): Long =
-    MongoHttp.get(s"$url/oplog/latest").toSeq.headOption.map { line =>
+  def latestSeq(url: String): Long = {
+    val lines = MongoHttp.get(s"$url/oplog/latest")
+    try Option(lines.nextLine()).map { line =>
       Json.parseObj(line).get("seq") match {
         case Some(DInt(n)) => n
         case other => throw new java.io.IOException(s"bad /oplog/latest body: $other")
       }
     }.getOrElse(0L)
+    finally lines.close()
+  }
 }
 
 /** Streaming form: offsets are oplog sequence numbers (the resume
@@ -295,8 +284,7 @@ class MongoHttpStream(scan: MongoHttpScan, opts: MongoHttp.Options)
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
 
   override def getDefaultReadLimit: ReadLimit =
-    if (opts.maxRowsPerTrigger == Long.MaxValue) ReadLimit.allAvailable()
-    else ReadLimit.maxRows(opts.maxRowsPerTrigger)
+    OplogLine.readLimit(Int.MaxValue, opts.maxRowsPerTrigger)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val head = MongoHttpStream.latestSeq(opts.url)
@@ -326,12 +314,12 @@ class MongoHttpStream(scan: MongoHttpScan, opts: MongoHttp.Options)
   override def stop(): Unit = ()
 }
 
-class MongoHttpReaderFactory(mode: String, batchRows: Long, pushed: Array[Filter],
+class MongoHttpReaderFactory(batchRows: Long, pushed: Array[Filter],
     required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case MongoSnapshotPartition(url) => new MongoSnapshotReader(url, batchRows, pushed, required)
-      case MongoOplogPartition(url)    => new MongoOplogReader(url, pushed, required)
+      case MongoOplogPartition(url)    => new OplogLineReader(MongoHttp.get(url), pushed, required)
     }
 }
 
@@ -379,7 +367,8 @@ class MongoSnapshotReader(baseUrl: String, batchRows: Long, pushed: Array[Filter
   override def next(): Boolean = {
     while (!exhausted) {
       if (page == null) fetchPage()
-      if (!page.hasNext) {
+      val line = page.nextLine()
+      if (line == null) {
         page.close(); page = null
         // a full page may have more behind it — but only if its cursor
         // moved past the one it was fetched from (a limit-honoring
@@ -389,11 +378,10 @@ class MongoSnapshotReader(baseUrl: String, batchRows: Long, pushed: Array[Filter
         exhausted = pageRaw != batchRows || !advanced
         if (advanced && (floor == null || pageMaxRaw > floor)) floor = pageMaxRaw
       } else {
-        val line = page.next()
         pageRaw += 1
         // per-event error contract: malformed lines drop, the scan lives
         scala.util.Try(Json.parseObj(line)).toOption.foreach { o =>
-          val id = MongoHttp.str(o, "id")
+          val id = OplogLine.str(o, "id")
           if (id != null) {
             if (pageMaxRaw == null || id > pageMaxRaw) pageMaxRaw = id
             if ((floor == null || id > floor) && idLowerBounds.forall(id >= _)) {
@@ -401,7 +389,7 @@ class MongoSnapshotReader(baseUrl: String, batchRows: Long, pushed: Array[Filter
               current = new GenericInternalRow(required.fields.map[Any] { f =>
                 f.name match {
                   case "id"  => UTF8String.fromString(id)
-                  case "doc" => UTF8String.fromString(MongoHttp.docStr(o))
+                  case "doc" => UTF8String.fromString(OplogLine.str(o, "doc"))
                 }
               })
               return true
@@ -414,46 +402,4 @@ class MongoSnapshotReader(baseUrl: String, batchRows: Long, pushed: Array[Filter
   }
   override def get(): InternalRow = current
   override def close(): Unit = if (page != null) { page.close(); page = null }
-}
-
-/** Oplog lines → the [[OplogJsonTable.SCHEMA]] rows; every pushed
-  * filter re-checks locally (the server already filtered — re-checking
-  * keeps a misbehaving sidecar from corrupting resume semantics). */
-class MongoOplogReader(url: String, pushed: Array[Filter], required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val lines = MongoHttp.get(url)
-  private var current: InternalRow = _
-  private val nsEqs = pushed.collect { case EqualTo("ns", v: String) => v }
-  private val tsGes = pushed.collect { case GreaterThanOrEqual("ts", v: Long) => v }
-  private val tsGts = pushed.collect { case GreaterThan("ts", v: Long) => v }
-
-  override def next(): Boolean = {
-    while (lines.hasNext) {
-      val line = lines.next()
-      scala.util.Try(Json.parseObj(line)).toOption
-        .filter(_.get("ts").exists(_.isInstanceOf[DInt])).foreach { o =>
-        val ts = o.get("ts") match { case Some(DInt(l)) => l; case _ => 0L }
-        val ns = MongoHttp.str(o, "ns")
-        if (nsEqs.forall(_ == ns) && tsGes.forall(ts >= _) && tsGts.forall(ts > _)) {
-          current = new GenericInternalRow(required.fields.map[Any] { f =>
-            f.name match {
-              case "ts" => ts
-              case "op" => UTF8String.fromString(MongoHttp.str(o, "op"))
-              case "ns" => UTF8String.fromString(ns)
-              case "id" => UTF8String.fromString(MongoHttp.str(o, "id"))
-              case "doc" => UTF8String.fromString(MongoHttp.docStr(o))
-              case "fromMigrate" => o.get("fromMigrate") match {
-                case Some(DBool(b)) => b
-                case _              => false
-              }
-            }
-          })
-          return true
-        }
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = lines.close()
 }

@@ -3,16 +3,13 @@ package graft.source.v2
 import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-import graft.model.{DBool, DInt, DObj, DStr, Json}
 
 /** DataSource V2 connector for JSON-lines oplog files — the concrete
   * form of the S1/S2 connector seam (SURVEY.md §2.1): what
@@ -33,9 +30,11 @@ import graft.model.{DBool, DInt, DObj, DStr, Json}
   * are one InputPartition each; larger files split into byte ranges
   * under the Hadoop line-reader contract (see [[OplogFilePartition]]),
   * so a multi-GB dump fans out across the cluster instead of pinning
-  * one core. Parsing uses the engine's own [[graft.model.Json]] codec;
-  * malformed lines follow the per-event error contract (dropped, not
-  * fatal).
+  * one core. Each partition's lines decode through the shared
+  * [[OplogLineReader]] (the same reader [[MongoHttpSource]] feeds from
+  * the wire): the engine's own [[graft.model.Json]] codec, the pushdown
+  * rule of [[OplogLine.accepts]], and the per-event error contract —
+  * malformed lines are dropped, not fatal.
   *
   * Usage: `spark.read.format("graft.source.v2.OplogJsonSource")
   *   .option("path", dir).load()`
@@ -51,14 +50,7 @@ class OplogJsonSource extends TableProvider {
 }
 
 object OplogJsonTable {
-  val SCHEMA: StructType = StructType(Seq(
-    StructField("ts", LongType),
-    StructField("op", StringType),
-    StructField("ns", StringType),
-    StructField("id", StringType),
-    StructField("doc", StringType),
-    StructField("fromMigrate", BooleanType),
-  ))
+  val SCHEMA: StructType = OplogLine.Schema
 }
 
 class OplogJsonTable(path: String) extends Table with SupportsRead {
@@ -82,16 +74,7 @@ class OplogScanBuilder(path: String, maxFilesPerTrigger: Int = Int.MaxValue,
   private var required: StructType = OplogJsonTable.SCHEMA
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // Accept ONLY predicates the reader fully enforces (all of them, not
-    // just the first): ns equalities and ts lower bounds. IsNotNull is
-    // NOT accepted — missing JSON keys surface as null columns, so Spark
-    // must keep evaluating it post-scan.
-    val (accepted, rejected) = filters.partition {
-      case EqualTo("ns", _: String) => true
-      case GreaterThanOrEqual("ts", _: Long) => true
-      case GreaterThan("ts", _: Long) => true
-      case _ => false
-    }
+    val (accepted, rejected) = filters.partition(OplogLine.accepts)
     pushed = accepted
     rejected // Spark re-evaluates anything the source didn't take
   }
@@ -290,17 +273,8 @@ class OplogMicroBatchStream(path: String, pushed: Array[Filter], required: Struc
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
 
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = Seq(
-      Option.when(maxFilesPerTrigger != Int.MaxValue)(ReadLimit.maxFiles(maxFilesPerTrigger)),
-      Option.when(maxRowsPerTrigger != Long.MaxValue)(ReadLimit.maxRows(maxRowsPerTrigger)),
-    ).flatten
-    limits match {
-      case Nil      => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many     => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    OplogLine.readLimit(maxFilesPerTrigger, maxRowsPerTrigger)
 
   // per-file row counts for maxRows admission: non-empty lines, i.e.
   // what the source must READ (malformed lines cost IO/parse and debit
@@ -462,7 +436,7 @@ class OplogReaderFactory(pushed: Array[Filter], required: StructType,
     conf: SerializableHadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OplogFilePartition]
-    new OplogPartitionReader(p.file, p.start, p.end, pushed, required, conf.value)
+    new OplogLineReader(new LineRangeIterator(p.file, p.start, p.end, conf.value), pushed, required)
   }
 }
 
@@ -477,7 +451,7 @@ class OplogReaderFactory(pushed: Array[Filter], required: StructType,
   * parse. Reads scan a 64 KB chunk buffer directly — no per-byte
   * stream call on the path this feature exists to make fast. */
 private[v2] class LineRangeIterator(file: String, start: Long, end: Long,
-    conf: org.apache.hadoop.conf.Configuration) {
+    conf: org.apache.hadoop.conf.Configuration) extends LineSource {
   // gzip dumps decompress inline (empty/corrupt headers degrade to an
   // empty stream, fd closed — see OplogScan.openDecoded); they always
   // arrive as one whole-file range, so positioning is never needed.
@@ -502,7 +476,7 @@ private[v2] class LineRangeIterator(file: String, start: Long, end: Long,
   }
 
   /** Next owned line, or null when the range (or file) is exhausted. */
-  def nextLine(): String =
+  override def nextLine(): String =
     if (pos >= end) null else readLine()
 
   private def refill(): Boolean = {
@@ -548,76 +522,5 @@ private[v2] class LineRangeIterator(file: String, start: Long, end: Long,
     new String(bytes, 0, len, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  def close(): Unit = in.close()
-}
-
-/** Line-by-line reader: parse -> pushed-filter -> project. */
-class OplogPartitionReader(file: String, startByte: Long, endByte: Long,
-    pushed: Array[Filter], required: StructType,
-    conf: org.apache.hadoop.conf.Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private val lines = new LineRangeIterator(file, startByte, endByte, conf)
-  private var current: InternalRow = _
-
-  // every accepted filter is enforced: multiple ns equalities must ALL
-  // hold (different values -> empty), multiple ts bounds conjoin
-  private val nsEqs: Array[String] = pushed.collect { case EqualTo("ns", v: String) => v }
-  private val tsGes: Array[Long] = pushed.collect { case GreaterThanOrEqual("ts", v: Long) => v }
-  private val tsGts: Array[Long] = pushed.collect { case GreaterThan("ts", v: Long) => v }
-
-  private def str(o: DObj, k: String): String = o.get(k) match {
-    case Some(DStr(s)) => s
-    case Some(other)   => other.render
-    case None          => null
-  }
-
-  override def next(): Boolean = {
-    var line = lines.nextLine()
-    while (line != null) {
-      if (line.nonEmpty) {
-        // per-event error contract: malformed lines drop, the scan
-        // lives. A line without an integer ts IS malformed — the packed
-        // BSON timestamp is the total order everything downstream (LWW,
-        // resume bounds) depends on, so coercing it would corrupt
-        // ordering and make pushed ts filters unsound. The other
-        // columns surface missing keys as nulls (which is why IsNotNull
-        // is never accepted as a pushed filter).
-        scala.util.Try(Json.parseObj(line)).toOption
-          .filter(_.get("ts").exists(_.isInstanceOf[DInt])).foreach { o =>
-          val ts = o.get("ts") match { case Some(DInt(l)) => l; case _ => 0L }
-          val ns = str(o, "ns")
-          val keep =
-            nsEqs.forall(_ == ns) && tsGes.forall(ts >= _) && tsGts.forall(ts > _)
-          if (keep) {
-            val values = required.fields.map { f =>
-              f.name match {
-                case "ts" => ts: Any
-                case "op" => UTF8String.fromString(str(o, "op"))
-                case "ns" => UTF8String.fromString(ns)
-                case "id" => UTF8String.fromString(str(o, "id"))
-                case "doc" =>
-                  UTF8String.fromString(o.get("doc").map {
-                    case d: DObj => d.render
-                    case DStr(s) => s
-                    case other   => other.render
-                  }.orNull)
-                case "fromMigrate" => o.get("fromMigrate") match {
-                  case Some(DBool(b)) => b
-                  case _              => false
-                }
-              }
-            }
-            current = new GenericInternalRow(values)
-            return true
-          }
-        }
-      }
-      line = lines.nextLine()
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = lines.close()
+  override def close(): Unit = in.close()
 }

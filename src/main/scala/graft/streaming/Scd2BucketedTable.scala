@@ -117,9 +117,13 @@ final class Scd2BucketedTable(
     * parquet. */
   private[streaming] def priorFor(batch: DataFrame): DataFrame = {
     val m = manifest()
-    BucketedStateStore.lookup(spark, dir, m, batch,
-      BucketedStateStore.batchStats(m.nBuckets, batch, layout), layout)
+    lookup(m, batch, BucketedStateStore.batchStats(m.nBuckets, batch, layout))
   }
+
+  private def lookup(m: BucketedStateStore.Manifest, batch: DataFrame,
+      st: BucketedStateStore.BatchStats): DataFrame =
+    BucketedStateStore.lookup(spark, dir, m,
+      BucketedStateStore.batchKeys(batch, layout.key, st.keys), st, layout)
 
   // ---- the per-trigger merge ----
 
@@ -144,7 +148,7 @@ final class Scd2BucketedTable(
       false
     } else {
       recordKeyType()
-      val prior = BucketedStateStore.lookup(spark, dir, m, batch, st, layout)
+      val prior = lookup(m, batch, st)
       BucketedStateStore.commitOn(m, StreamScd2.applyBatch(prior, batch), dir,
         Spec(m.nBuckets, compactThreshold, retainManifests), st.dirty,
         BucketedStateStore.TargetBucketBytes, layout, Some(batchId), preSwapHook)

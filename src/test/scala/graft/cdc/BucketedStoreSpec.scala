@@ -143,9 +143,9 @@ class BucketedStoreSpec extends AnyFunSuite {
       .toDF("id", "doc", "parent", "ts")
     BucketedStateStore.seed(seedState, dir, spec)
     val few = Seq("k1", "k9", "k17")
-    // the same three keys repeated past the broadcast cap: the cap
-    // counts distinct keys, not rows
-    val repeated = spark.range(BucketedStateStore.BroadcastKeyLimit + 1)
+    // the same three keys repeated past the 500k-key broadcast cap: the
+    // cap counts distinct keys, not rows
+    val repeated = spark.range(500001)
       .select(element_at(typedLit(few), (col("id") % 3 + 1).cast("int")).as("id"))
     // size-based broadcasting off, so only the lookup's own hint can
     // broadcast (tiny frames would auto-broadcast without it)

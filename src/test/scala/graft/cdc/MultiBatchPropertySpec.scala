@@ -242,8 +242,8 @@ class MultiBatchPropertySpec extends AnyFunSuite {
   test("oversized-trigger source lookup: AQE skew-join splits a hot snapshot key (plan-pinned)") {
     // The ONE CDC join that can skew: the S5 source point-lookup joins
     // the (possibly UNDEDUPLICATED — multiple versions per key) source
-    // snapshot against the batch's distinct keys. Below
-    // BroadcastKeyLimit the key set broadcasts and skew is moot; this
+    // snapshot against the batch's keys. Below the store's broadcast
+    // cap the key set broadcasts and skew is moot; this
     // pins the oversized-trigger degradation path — the join left to
     // the planner — where a hot document with a version pile-up forms a
     // skewed shuffle partition that AQE must mark and split. Batch
@@ -288,11 +288,11 @@ class MultiBatchPropertySpec extends AnyFunSuite {
         OplogRow(BsonTs(50, 0).toLong, "u", "db.c", "hot", """{"$set":{"f.b":7}}""") +:
           (1 to 200).map(k =>
             OplogRow(BsonTs(50, k).toLong, "u", "db.c", s"bg${k - 1}", s"""{"$$set":{"f.b":$k}}""")))
-      // batchKeyCount above the cap forces the planner-owned join — the
-      // oversized-trigger path under test
+      // a key bound above the broadcast cap forces the planner-owned
+      // join — the oversized-trigger path under test
+      val keys = BucketedStateStore.batchKeys(events.toDF(), "id", bound = Long.MaxValue)
       val out = BatchApplier.applyOplogBatch(events, StateStore.empty(spark), task,
-        source = Some(source),
-        batchKeyCount = Some(BucketedStateStore.BroadcastKeyLimit + 1))
+        source = Some(BucketedStateStore.restrictSource(source, keys)))
       val rows = out.collect().map(r => r.getAs[String]("id") -> r.getAs[String]("doc")).toMap
       // correctness through the skew-split join: with no sink state, a
       // $set dispatches as a transform of the FETCHED source document

@@ -111,4 +111,39 @@ class PartitioningSpec extends AnyFunSuite {
       case (k, None)    => conf.unset(k)
     }
   }
+
+  test("fanOut gates on the tasks that decode rows, not on the split count") {
+    val par = spark.sparkContext.defaultParallelism
+    val base = java.nio.file.Files.createTempDirectory("fanout").toString
+    val rows = spark.range(50000)
+      .select(col("id").as("doc_id"), concat(lit("text "), col("id").cast("string")).as("text"))
+      .coalesce(1)
+    rows.write.parquet(s"$base/one") // the default block size: ONE row group
+    rows.write.option("parquet.block.size", "4096").parquet(s"$base/many")
+    def shuffles(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("Exchange")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "1024")
+      // the single row group is cut into >= defaultParallelism byte
+      // ranges, but only the range holding its midpoint decodes rows:
+      // the scan is still one task, so the frame must be repartitioned
+      val one = spark.read.parquet(s"$base/one")
+      assert(one.queryExecution.toRdd.getNumPartitions >= par)
+      assert(Tables.decodingTasks(one, par) === 1)
+      assert(shuffles(Tables.fanOut(one)), "a one-row-group scan must fan out")
+      // a row-grouped layout already decodes in parallel: identity
+      val many = spark.read.parquet(s"$base/many")
+      assert(Tables.decodingTasks(many, par) >= par)
+      assert(!shuffles(Tables.fanOut(many)), "a row-grouped scan must not shuffle")
+      // a frame that is not a plain parquet scan falls back to the
+      // unconditional repartition without planning its splits
+      assert(Tables.decodingTasks(many.repartition(par * 2), par) === 0)
+      assert(Tables.decodingTasks(spark.range(100).toDF("doc_id"), par) === 0)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }

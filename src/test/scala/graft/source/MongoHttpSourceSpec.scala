@@ -26,7 +26,7 @@ class MongoHttpSourceSpec extends AnyFunSuite {
     * request path+query. */
   private final class StubMongo {
     val docs = scala.collection.mutable.LinkedHashMap[String, String]()
-    val oplog = scala.collection.mutable.ArrayBuffer[String]() // full entry JSON sans seq
+    val oplog = scala.collection.mutable.ArrayBuffer[String]() // served lines, seq = index + 1
     val requests = scala.collection.mutable.ArrayBuffer[String]()
     private var server: HttpServer = _
 
@@ -40,8 +40,11 @@ class MongoHttpSourceSpec extends AnyFunSuite {
 
     def addOp(ts: Long, op: String, ns: String, id: String, doc: String): Unit =
       oplog.synchronized {
-        oplog += s"""{"ts":$ts,"op":"$op","ns":"$ns","id":"$id","doc":$doc}"""
+        oplog += s"""{"seq":${oplog.size + 1},"ts":$ts,"op":"$op","ns":"$ns","id":"$id","doc":$doc}"""
       }
+
+    /** One oplog line served verbatim (malformed and empty ones too). */
+    def addLine(line: String): Unit = oplog.synchronized { oplog += line }
 
     def start(): this.type = {
       server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -57,15 +60,17 @@ class MongoHttpSourceSpec extends AnyFunSuite {
             val ns = param(query, "ns")
             val fromTs = param(query, "fromTs").map(_.toLong)
             oplog.synchronized {
-              (from until to).filter(_ < oplog.size).map(i => (i + 1, oplog(i.toInt)))
-            }.filter { case (_, e) =>
-              val o = graft.model.Json.parseObj(e)
-              ns.forall(n => o.get("ns").exists(_ == graft.model.DStr(n))) &&
-                fromTs.forall(t => o.get("ts").exists {
-                  case graft.model.DInt(v) => v >= t; case _ => false
-                })
-            }.map { case (seq, e) => s"""{"seq":$seq,${e.stripPrefix("{")}""" }
-              .mkString("\n")
+              (from until to).filter(_ < oplog.size).map(i => oplog(i.toInt))
+            }.filter { e =>
+              // a line the server cannot parse passes through: the
+              // reader's own contract must drop it
+              scala.util.Try(graft.model.Json.parseObj(e)).toOption.forall { o =>
+                ns.forall(n => o.get("ns").exists(_ == graft.model.DStr(n))) &&
+                  fromTs.forall(t => o.get("ts").exists {
+                    case graft.model.DInt(v) => v >= t; case _ => false
+                  })
+              }
+            }.mkString("\n")
           } else if (path.startsWith("/snapshot/")) {
             val shard = param(query, "shard").get.toInt
             val shards = param(query, "shards").get.toInt
@@ -293,6 +298,61 @@ class MongoHttpSourceSpec extends AnyFunSuite {
       assert(ranges.forall { case (f, t) => t - f <= 2 },
         s"a trigger exceeded the row budget: $ranges")
       assert(ranges.map { case (f, t) => t - f }.sum === 5)
+    } finally stub.stop()
+  }
+
+  test("cross-connector: a file dump and the wire emit identical rows, with and without pushdown") {
+    val lines = Seq(
+      s"""{"ts":${BsonTs(10, 0).toLong},"op":"i","ns":"db.c","id":"a","doc":{"_id":"a","v":1},"fromMigrate":false}""",
+      s"""{"ts":${BsonTs(10, 1).toLong},"op":"u","ns":"db.c","id":"a","doc":{"$$set":{"v":2}},"fromMigrate":true}""",
+      s"""{"ts":${BsonTs(10, 2).toLong},"op":"d","ns":"db.c","id":"b"}""", // no doc, no fromMigrate
+      """{"ts":"12","op":"i","ns":"db.c","id":"q","doc":{"_id":"q"}}""", // ts not an integer
+      """{"ts":1.5,"op":"i","ns":"db.c","id":"r","doc":{"_id":"r"}}""",
+      """{"ts":7,"op":"i","ns":"db.c",""", // malformed JSON
+      "",
+      s"""{"ts":${BsonTs(11, 0).toLong},"op":"i","ns":"db.c","id":"s","doc":"{\\"_id\\":\\"s\\"}"}""", // doc is a string
+      s"""{"ts":${BsonTs(11, 1).toLong},"op":"i","ns":"other.x","id":7,"doc":{"_id":7,"w":[1,null]}}""",
+      s"""{"ts":${BsonTs(12, 0).toLong},"op":"i","ns":"db.c","id":"t","doc":{"_id":"t"},"fromMigrate":"yes"}""",
+    )
+    val dir = Files.createTempDirectory("cross-connector").toString
+    // CRLF on disk: the file reader strips the '\r', the wire reader's
+    // line splitter never sees one (the stub joins with '\n')
+    Files.write(java.nio.file.Paths.get(dir, "dump.jsonl"),
+      lines.mkString("", "\r\n", "\r\n").getBytes(StandardCharsets.UTF_8))
+    val stub = new StubMongo().start()
+    try {
+      lines.foreach(stub.addLine)
+      val file = spark.read.format("graft.source.v2.OplogJsonSource").option("path", dir).load()
+      val wire = spark.read.format("graft.source.v2.MongoHttpSource")
+        .option("url", stub.url).option("mode", "oplog").option("batchRows", "3").load()
+      val from = BsonTs(10, 1).toLong
+      val reads: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+        "all columns" -> (df => df),
+        "pushed ns/ts" -> (df => df.filter(col("ns") === "db.c" && col("ts") >= from)),
+        "pushed strict ts, pruned" -> (df => df.filter(col("ts") > from).select("id", "ts")),
+        "pruned doc/fromMigrate" -> (df => df.select("fromMigrate", "doc")),
+      )
+      reads.foreach { case (what, read) =>
+        val (f, w) = (read(file), read(wire))
+        if (what.startsWith("pushed"))
+          Seq(f, w).foreach { df =>
+            val plan = df.queryExecution.executedPlan.toString
+            assert(plan.contains("GreaterThan"), s"$what: ts bound not pushed:\n${plan.take(1200)}")
+          }
+        assert(f.schema === w.schema, what)
+        val fileRows = f.collect().toSeq
+        assert(fileRows === w.collect().toSeq, what)
+        assert(fileRows.nonEmpty, what)
+      }
+      // the valid lines, with nulls for missing keys and a rendered doc
+      val all = file.collect().map(_.toSeq)
+      assert(all.map(_(3)).toSeq === Seq("a", "a", "b", "s", "7", "t"))
+      assert(all(2)(4) == null && all(2)(5) == false, all(2))
+      assert(all(3)(4) === """{"_id":"s"}""")
+      assert(all(5)(5) == false, "a non-boolean fromMigrate reads as false")
+      // the wire query carries the pushed predicates
+      assert(stub.requests.exists(r => r.contains("ns=db.c") && r.contains(s"fromTs=$from")),
+        stub.requests.mkString("\n"))
     } finally stub.stop()
   }
 }
