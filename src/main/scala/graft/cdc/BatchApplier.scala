@@ -12,7 +12,8 @@ final case class ApplyRow(
     id: String,
     kind: Int, // 0 = state row, 1 = source-snapshot row, 2 = oplog event
     ts: Long,
-    op: String,
+    seq: Long, // a state row's commit seq (0 for the other kinds)
+    op: String, // an event's op; a state row's action (upsert/delete)
     ns: String,
     doc: String,
     parent: String,
@@ -31,7 +32,8 @@ final case class ApplyRow(
   * O(events-per-key) group memory. The bucketed store hands in only
   * the prior rows of the batch's keys, so the shuffle stays O(batch)
   * whatever the state's size, and restricts the source snapshot to the
-  * batch's keys the same way.
+  * batch's keys the same way. Those rows are the store's raw versions;
+  * the group resolves them, so no window shuffles them first.
   *
   * Semantics are inherited verbatim from the pure core: the per-key fold
   * is `mergeOplogs` -> `dispatch` -> ts-guarded LWW against the existing
@@ -42,7 +44,10 @@ object BatchApplier {
 
   /** Apply one compacted-or-raw oplog micro-batch onto the state.
     * @param events raw events of ONE namespace (run P3 filters first)
-    * @param state  current state (id, doc, parent, ts)
+    * @param state  current state (id, doc, parent, ts), or a key's raw
+    *               versions with `__seq` and `action` columns added: the
+    *               highest `__seq` is the key's state, none if its
+    *               action is `delete`
     * @param source optional source snapshot (id, doc[, ts]) — the Mongo
     *               fallback for updates to never-seen keys. Only the
     *               batch's keys matter (a key without events emits
@@ -85,8 +90,10 @@ object BatchApplier {
     implicit val applyEnc = Encoders.product[ApplyRow]
     implicit val strEnc = Encoders.STRING
 
+    def stateCol(c: String, default: Any) = if (state.columns.contains(c)) col(c) else lit(default)
     val stateRows = state.select(
-      col("id"), lit(0).as("kind"), col("ts"), lit("").as("op"), lit("").as("ns"),
+      col("id"), lit(0).as("kind"), col("ts"), stateCol("__seq", 0L).as("seq"),
+      stateCol("action", "upsert").as("op"), lit("").as("ns"),
       col("doc"), col("parent"), lit(false).as("fromMigrate")).as[ApplyRow]
     // a source snapshot may arrive undeduplicated (multiple versions per
     // key, each with its ts) — the earliest wins in-group, so callers
@@ -94,11 +101,11 @@ object BatchApplier {
     val sourceRows = source.map { src =>
       val srcTs = if (src.columns.contains("ts")) col("ts") else lit(0L)
       src.select(
-        col("id"), lit(1).as("kind"), srcTs.as("ts"), lit("").as("op"), lit("").as("ns"),
+        col("id"), lit(1).as("kind"), srcTs.as("ts"), lit(0L).as("seq"), lit("").as("op"), lit("").as("ns"),
         col("doc"), lit(null: String).as("parent"), lit(false).as("fromMigrate")).as[ApplyRow]
     }
     val eventRows = events.select(
-      col("id"), lit(2).as("kind"), col("ts"), col("op"), col("ns"),
+      col("id"), lit(2).as("kind"), col("ts"), lit(0L).as("seq"), col("op"), col("ns"),
       col("doc"), lit(null: String).as("parent"), col("fromMigrate")).as[ApplyRow]
 
     val all = sourceRows.foldLeft(stateRows.unionByName(eventRows))(_ unionByName _)
@@ -115,7 +122,8 @@ object BatchApplier {
       .as[ApplyRow]
       .mapPartitions(it => groupRuns(it).flatMap { rows =>
         val id = rows.head.id
-        val stateRow = rows.find(_.kind == 0)
+        // the newest version; a delete tombstone means no state
+        val stateRow = rows.filter(_.kind == 0).maxByOption(_.seq).filter(_.op != "delete")
         val evs = rows.filter(_.kind == 2)
         if (evs.isEmpty) {
           // untouched key: state passes through unchanged

@@ -1,9 +1,12 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
 
 /** Incremental, log-structured state persistence for the CDC tail — the
@@ -45,13 +48,18 @@ import graft.model.{DArr, DInt, DObj, DStr, DVal, Json, TaskSpec}
   * the prior docs for exactly the batch's keys come from a broadcast
   * hash join of the (small) key set against only the dirty buckets'
   * files — the engine-owned analog of the reference's batched ES
-  * `mget` (S6, reference src/elasticsearch.ts:30-63). The state side
-  * streams through the join co-located with its files: no exchange
-  * ever materializes the state (pinned by BucketedStoreSpec's
-  * prior-key lookup plan assertion). A `min(id)..max(id)` range
-  * predicate on the scan is pushed to parquet, so with id-sorted bases
-  * (written sorted) and a key-local batch, row-group min/max skipping
-  * prunes below bucket granularity.
+  * `mget` (S6, reference src/elasticsearch.ts:30-63). The key set is
+  * the batch's distinct keys, collected by the stats pass and shipped
+  * back as one driver-built local relation while they fit under the
+  * session's broadcast threshold; the source semi join reads the same
+  * frame, so AQE broadcasts it once and reuses the exchange. The state
+  * side streams through the join co-located with its files: no
+  * exchange ever materializes the state (pinned by BucketedStoreSpec's
+  * prior-key lookup plan assertion), and the per-apply lookup hands the
+  * fold the raw versions — the fold's own shuffle on the key resolves
+  * them. A `min(id)..max(id)` range predicate on the scan is pushed to
+  * parquet, so with id-sorted bases (written sorted) and a key-local
+  * batch, row-group min/max skipping prunes below bucket granularity.
   *
   * Sizing: `nBuckets ≈ state_bytes / TargetBucketBytes` (16 MB),
   * clamped to `[1, Spec.nBuckets]`. The scan backfill
@@ -179,11 +187,13 @@ object BucketedStateStore {
     /** Bucket assignment: Spark's codegen'd Murmur3 `hash`, stable
       * across the write and every later read/lookup of the same store. */
     def bucket(n: Int): Column = pmod(hash(col(key)), lit(n))
-    def empty(spark: SparkSession): DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows)
+    def empty(spark: SparkSession): DataFrame = emptyFrame(spark, rows)
   }
 
-  private val Cdc = Layout("id", StateStore.schema, NewestRow)
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  private[graft] val Cdc = Layout("id", StateStore.schema, NewestRow)
 
   def bucketCol(n: Int): Column = Cdc.bucket(n)
 
@@ -269,8 +279,7 @@ object BucketedStateStore {
       .map { case (owners, rels) => (owners.toSeq.sorted, rels.map(_._1).sorted) }
       .sortBy(_._2.head)
     val rels = baseRels ++ ownerGroups.flatMap(_._2)
-    if (rels.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], l.fileSchema)
+    if (rels.isEmpty) emptyFrame(spark, l.fileSchema)
     else {
       val rows = scanPaths(spark, rels.map(rel => s"$dir/$rel"), l)
       if (ownerGroups.isEmpty) rows
@@ -392,48 +401,88 @@ object BucketedStateStore {
       case None => StateStore.empty(spark)
       case Some(m) =>
         val st = batchStats(m.nBuckets, keys, Cdc)
-        lookup(spark, dir, m, batchKeys(keys, Cdc.key, st.keys), st, Cdc)
+        resolve(lookup(spark, dir, m, batchKeys(keys, st, Cdc.key), st, Cdc), Cdc)
     }
 
-  /** One tiny aggregate over the batch: its row count, a bound on its
-    * distinct keys (the broadcast-cap probe), the dirty bucket ids and
-    * the key range — everything the planner-side pruning needs, in a
-    * single job. On a persisted batch this job is also the pass that
-    * materialises it. */
-  private[graft] final case class BatchStats(rows: Long, keys: Long, dirty: Set[Int], lo: Any, hi: Any)
+  /** What the planner-side pruning needs from a batch: its row count,
+    * the dirty bucket ids, the key range (null bounds when every key is
+    * null) and its distinct non-null keys while they fit under the
+    * session's broadcast threshold (None above it). */
+  private[graft] final case class BatchStats(rows: Long, dirty: Set[Int], lo: Any, hi: Any, keys: Option[Seq[Any]])
 
+  /** [[BatchStats]] in ONE pass over the batch (one job): each partition
+    * counts its rows, bounds its keys, collects its buckets and its
+    * distinct keys, and the driver combines them. On a persisted batch
+    * this pass is the one that materialises the cache. A partition
+    * stops collecting keys once they pass its share of the threshold,
+    * so the driver never receives much more than the threshold; key
+    * bytes are counted as 24 bytes of row and slot plus the key's own
+    * bytes (a string's UTF-8 length, else the type's size), and a
+    * threshold of -1 (broadcast off) collects none. */
   private[graft] def batchStats(nBuckets: Int, batch: DataFrame, l: Layout): BatchStats = {
-    val row = batch.agg(
-      count(lit(1)).as("n"),
-      approx_count_distinct(col(l.key)).as("k"),
-      collect_set(l.bucket(nBuckets)).as("bs"),
-      min(col(l.key)).as("lo"),
-      max(col(l.key)).as("hi")).head()
-    val rows = row.getLong(0)
-    // the HLL estimate (5% relative standard deviation) plus a 4-sigma
-    // margin, never above the row count
-    val keys = math.min(rows, math.ceil(row.getLong(1) * 1.2).toLong)
-    BatchStats(rows, keys, row.getSeq[Int](2).toSet, row.get(3), row.get(4))
+    val kt = batch.schema(l.key).dataType
+    val cap = batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rdd = batch.select(col(l.key), l.bucket(nBuckets)).queryExecution.toRdd
+    val partCap = if (cap < 0) -1L else cap / math.max(1, rdd.getNumPartitions)
+    def bytes(k: Any): Long = 24L + (k match {
+      case s: UTF8String => s.numBytes.toLong
+      case _             => kt.defaultSize.toLong
+    })
+    val parts = rdd.mapPartitions { it =>
+      var n = 0L
+      var lo, hi: Any = null
+      val dirty = scala.collection.mutable.HashSet.empty[Int]
+      val keys = scala.collection.mutable.HashSet.empty[Any]
+      var keyBytes = 0L
+      var fits = partCap >= 0
+      it.foreach { r =>
+        n += 1
+        dirty += r.getInt(1)
+        if (!r.isNullAt(0)) {
+          val k = r.get(0, kt) match {
+            case s: UTF8String => s.clone() // the row's buffer is reused
+            case v             => v
+          }
+          if (lo == null || compareKeys(k, lo) < 0) lo = k
+          if (hi == null || compareKeys(k, hi) > 0) hi = k
+          if (fits && keys.add(k)) {
+            keyBytes += bytes(k)
+            if (keyBytes > partCap) { fits = false; keys.clear() }
+          }
+        }
+      }
+      Iterator.single((n, dirty.toArray, lo, hi, if (fits) Some(keys.toArray) else None))
+    }.collect()
+    val bounds = parts.flatMap(p => Option(p._3) ++ Option(p._4)).sortWith(compareKeys(_, _) < 0)
+    def toScala(v: Any): Any = if (v == null) null else CatalystTypeConverters.convertToScala(v, kt)
+    val keys =
+      if (parts.exists(_._5.isEmpty)) None
+      else Some(parts.flatMap(_._5.get).distinct.toSeq).filter(_.map(bytes).sum <= cap)
+    BatchStats(parts.map(_._1).sum, parts.flatMap(_._2).toSet,
+      toScala(bounds.headOption.orNull), toScala(bounds.lastOption.orNull), keys.map(_.map(toScala)))
   }
 
-  /** Above this many distinct batch keys the key side stops forcing a
-    * broadcast (a catch-up storm batch could be millions of keys —
-    * hundreds of MB on every executor); the other side then merely
-    * shuffles for that oversized trigger. */
-  private val BroadcastKeyLimit = 500000L
+  /** Order of two internal key values of one type (UTF8String bytes,
+    * boxed numbers, Decimal — every orderable key type is Comparable). */
+  private def compareKeys(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
 
   /** The key side of a batch's point lookups (the state lookup and
-    * [[restrictSource]]): the batch's RAW `key` column, broadcast while
-    * `bound` — an upper bound on its distinct keys — is under the cap.
-    * Both consumers are LEFT SEMI joins, which never duplicate a row
-    * however often a key repeats, so no distinct aggregate (no shuffle)
-    * precedes the broadcast, and above the cap the key side is the PLAIN
-    * exchange AQE's OptimizeSkewedJoin pattern-matches (pinned by
-    * MultiBatchPropertySpec). */
-  private[graft] def batchKeys(batch: DataFrame, key: String, bound: Long): DataFrame = {
-    val keys = batch.select(col(key))
-    if (bound <= BroadcastKeyLimit) broadcast(keys) else keys
-  }
+    * [[restrictSource]]). While the stats pass collected the keys, they
+    * come back as ONE broadcast local relation: both semi joins read the
+    * same frame, so AQE runs one broadcast job and reuses its exchange
+    * (it never reuses an exchange over a cached relation). Above the
+    * threshold the side is the batch's RAW `key` column: both consumers
+    * are LEFT SEMI joins, which never duplicate a row however often a
+    * key repeats, so no distinct aggregate (no shuffle) precedes the
+    * join, and the side is the PLAIN exchange AQE's OptimizeSkewedJoin
+    * pattern-matches (pinned by MultiBatchPropertySpec). */
+  private[graft] def batchKeys(batch: DataFrame, st: BatchStats, key: String): DataFrame =
+    st.keys match {
+      case Some(ks) =>
+        broadcast(batch.sparkSession.createDataFrame(
+          ks.map(Row(_)).asJava, StructType(Seq(batch.schema(key)))))
+      case None => batch.select(col(key))
+    }
 
   /** A source snapshot cut down to a [[batchKeys]] key side: O(batch)
     * rows into the fold instead of O(source), and a semantic no-op,
@@ -443,16 +492,23 @@ object BucketedStateStore {
 
   /** The rows of `m` for the batch keys in `keys` (a [[batchKeys]]
     * frame): a LEFT SEMI join over the dirty buckets' files, with the
-    * batch's key range pushed to parquet. */
+    * batch's key range pushed to parquet. Under [[NewestRow]] it returns
+    * the scoped RAW versions (the layout's file columns: `action` and
+    * `__seq` included) — the CDC fold already shuffles on the key, so it
+    * resolves them there instead of a window shuffling them first;
+    * [[NewestCommit]] resolves here. */
   private[graft] def lookup(
       spark: SparkSession, dir: String, m: Manifest,
       keys: DataFrame, st: BatchStats, l: Layout): DataFrame = {
     val paths = m.livePathsFor(dir, st.dirty)
-    if (paths.isEmpty || st.lo == null) l.empty(spark)
-    else resolve(
-      scanBuckets(spark, dir, m, st.dirty, l)
+    if (paths.isEmpty || st.lo == null)
+      if (l.resolution == NewestRow) emptyFrame(spark, l.fileSchema) else l.empty(spark)
+    else {
+      val raw = scanBuckets(spark, dir, m, st.dirty, l)
         .filter(col(l.key) >= lit(st.lo) && col(l.key) <= lit(st.hi))
-        .join(keys, Seq(l.key), "left_semi"), l)
+        .join(keys, Seq(l.key), "left_semi")
+      if (l.resolution == NewestRow) raw else resolve(raw, l)
+    }
   }
 
   /** The store is SINGLE-WRITER by contract (one streaming query owns a
@@ -484,10 +540,15 @@ object BucketedStateStore {
   /** [[commitDelta]] against a manifest the caller already loaded (the
     * per-trigger apply reads it once for the lookup and the commit),
     * growing the bucket count past `target` bytes per base. Every
-    * pointer swap writes `token` as the pointer's second token. */
+    * pointer swap writes `token` as the pointer's second token.
+    * `committed` receives the committed delta read back (the columns of
+    * `applied`) right after its pointer swap, before compaction and
+    * vacuum can retire it: exactly the rows the fold produced, without
+    * a cache or a second fold. */
   private[graft] def commitOn(
       m: Manifest, applied: DataFrame, dir: String, spec: Spec, dirty: Set[Int],
-      target: Long, l: Layout, token: Option[Long], preSwap: () => Unit = () => ()): Long = {
+      target: Long, l: Layout, token: Option[Long], preSwap: () => Unit = () => (),
+      committed: Option[DataFrame => Unit] = None): Long = {
     val spark = applied.sparkSession
     val seq = m.seq + 1
     val rel = s"data/delta_$seq"
@@ -502,6 +563,7 @@ object BucketedStateStore {
     preSwap()
     checkPointerUnmoved(dir, m.seq)
     writeManifest(dir, next, token)
+    committed.foreach(f => f(scanPaths(spark, Seq(s"$dir/$rel"), l).select(applied.columns.toSeq.map(col): _*)))
 
     // amortized compaction: all over-threshold buckets in ONE job,
     // scanned bucket-scoped so a stale shared-delta row of an
@@ -541,12 +603,13 @@ object BucketedStateStore {
   /** The full incremental micro-batch apply: point-lookup prior state
     * for the batch's keys, run the fused compact+dispatch+LWW fold
     * (which itself semi-joins the source snapshot down to the batch's
-    * keys), and commit the outcomes as one shared delta. The manifest is
-    * read once, and one aggregate over `events` yields its row count,
-    * dirty buckets and id range; callers that run several actions over
-    * the batch persist it first (the tail does), so that aggregate is
-    * the pass that materialises it. Returns the committed manifest seq,
-    * or None for an empty batch, which commits nothing. */
+    * keys and resolves the looked-up versions), and commit the outcomes
+    * as one shared delta. The manifest is read once, and one pass over
+    * `events` yields its row count, dirty buckets, id range and key
+    * side ([[batchStats]]); callers that run several actions over the
+    * batch persist it first (the tail does), so that pass is the one
+    * that materialises it. Returns the committed manifest seq, or None
+    * for an empty batch, which commits nothing. */
   def applyBatch(
       events: Dataset[OplogRow],
       task: TaskSpec,
@@ -555,9 +618,10 @@ object BucketedStateStore {
       source: Option[DataFrame] = None,
       dropped: Option[org.apache.spark.util.LongAccumulator] = None,
       // load-leg side output: the batch's per-key outcomes (id, doc,
-      // parent, ts, action), exactly what the commit writes — e.g. the
-      // tail's bulk-body emitter (L2). The frame is persisted around
-      // the commit when a consumer is present, so the fold runs once.
+      // parent, ts, action), exactly what the commit wrote — e.g. the
+      // tail's bulk-body emitter (L2). It reads the committed delta
+      // back after the pointer swap, so the fold runs once and nothing
+      // is cached.
       onOutcomes: Option[DataFrame => Unit] = None,
   ): Option[Long] =
     applySized(events, task, dir, spec, source, dropped, onOutcomes, TargetBucketBytes)
@@ -568,22 +632,16 @@ object BucketedStateStore {
       events: Dataset[OplogRow], task: TaskSpec, dir: String, spec: Spec,
       source: Option[DataFrame], dropped: Option[org.apache.spark.util.LongAccumulator],
       onOutcomes: Option[DataFrame => Unit], target: Long): Option[Long] = {
-    val spark = events.sparkSession
     val m = readManifest(dir).getOrElse(Manifest(spec.nBuckets, -1L, Map.empty))
     val batch = events.toDF()
     val st = batchStats(m.nBuckets, batch, Cdc)
     if (st.rows == 0) None
     else {
-      val keys = batchKeys(batch, Cdc.key, st.keys)
-      val prior = lookup(spark, dir, m, keys, st, Cdc)
-      val applied0 = BatchApplier.applyOplogBatchKeepDeletes(
-        events, prior, task, source.map(restrictSource(_, keys)), dropped)
-      val applied = if (onOutcomes.isDefined) applied0.persist() else applied0
-      try {
-        val r = commitOn(m, applied, dir, spec, st.dirty, target, Cdc, None)
-        onOutcomes.foreach(f => f(applied))
-        Some(r)
-      } finally if (onOutcomes.isDefined) { applied.unpersist(); () }
+      val keys = batchKeys(batch, st, Cdc.key)
+      val applied = BatchApplier.applyOplogBatchKeepDeletes(
+        events, lookup(events.sparkSession, dir, m, keys, st, Cdc), task,
+        source.map(restrictSource(_, keys)), dropped)
+      Some(commitOn(m, applied, dir, spec, st.dirty, target, Cdc, None, committed = onOutcomes))
     }
   }
 

@@ -189,9 +189,9 @@ object TailQuery {
         // observed metrics exact (each uncached action would re-run the
         // CollectMetrics node and inflate the counters — an isEmpty
         // probe alone adds its scanned row) and reads the micro-batch
-        // files once instead of twice. On the bucketed path that pass
-        // is the store's batch-stats aggregate, which also yields the
-        // row count; the legacy path counts.
+        // files once instead of twice. On both paths that pass is the
+        // store's one-pass batch stats (row count, key range, dirty
+        // buckets and the collected key side) — a single job.
         batch.persist()
         try {
           // an empty trigger applies nothing: no state rewrite, no
@@ -200,23 +200,21 @@ object TailQuery {
           val loaded = effectiveBuckets match {
             case Some(spec) =>
               // incremental: touch only the batch's keys and buckets;
-              // the bulk load leg taps the same outcomes the delta
-              // commit writes — no second fold
+              // the bulk load leg reads back the delta the commit just
+              // wrote — no second fold and no cache
               BucketedStateStore.applyBatch(
                 batch.as[OplogRow], task, stateDir, spec, source,
                 onOutcomes = bulk.map(b => (o: DataFrame) => writeBulk(o, b, batchId))).isDefined
             case None =>
-              val batchRows = batch.count()
-              if (batchRows > 0) {
+              val stats = BucketedStateStore.batchStats(1, batch, BucketedStateStore.Cdc)
+              if (stats.rows > 0) {
                 val st = StateStore.read(spark, stateDir)
                 // fused compact+dispatch+merge: one co-grouped shuffle per
-                // batch, over the source restricted to the batch's keys.
-                // The row count upper-bounds the distinct-key count, so it
-                // serves as the broadcast-cap bound without a separate
-                // distinct-count job per trigger. Delete outcomes are kept
-                // so the bulk leg sees them; the state write filters its
-                // tombstones exactly as applyOplogBatch.
-                val keys = BucketedStateStore.batchKeys(batch, "id", batchRows)
+                // batch, over the source restricted to the batch's keys
+                // (the same key side the bucketed path builds). Delete
+                // outcomes are kept so the bulk leg sees them; the state
+                // write filters its tombstones exactly as applyOplogBatch.
+                val keys = BucketedStateStore.batchKeys(batch, stats, "id")
                 val outcomes0 = BatchApplier.applyOplogBatchKeepDeletes(
                   batch.as[OplogRow], st, task, source.map(BucketedStateStore.restrictSource(_, keys)))
                 val outcomes = if (bulk.isDefined) outcomes0.persist() else outcomes0
@@ -228,7 +226,7 @@ object TailQuery {
                   bulk.foreach(b => writeBulk(outcomes, b, batchId))
                 } finally if (bulk.isDefined) { outcomes.unpersist(); () }
               }
-              batchRows > 0
+              stats.rows > 0
           }
           // mirror tail progress to user persistence (L4 side channel);
           // failures never kill the batch — the authoritative

@@ -113,7 +113,8 @@ final class Scd2BucketedTable(
 
   /** Current history rows for exactly the keys of `batch` — the
     * merge's point lookup: only the dirty buckets' files, the batch's
-    * raw keys broadcast into a semi join, the key range pushed to
+    * key side ([[BucketedStateStore.batchKeys]]: its collected keys
+    * broadcast while they fit) in a semi join, the key range pushed to
     * parquet. */
   private[streaming] def priorFor(batch: DataFrame): DataFrame = {
     val m = manifest()
@@ -123,7 +124,7 @@ final class Scd2BucketedTable(
   private def lookup(m: BucketedStateStore.Manifest, batch: DataFrame,
       st: BucketedStateStore.BatchStats): DataFrame =
     BucketedStateStore.lookup(spark, dir, m,
-      BucketedStateStore.batchKeys(batch, layout.key, st.keys), st, layout)
+      BucketedStateStore.batchKeys(batch, st, layout.key), st, layout)
 
   // ---- the per-trigger merge ----
 

@@ -143,15 +143,11 @@ class BucketedStoreSpec extends AnyFunSuite {
       .toDF("id", "doc", "parent", "ts")
     BucketedStateStore.seed(seedState, dir, spec)
     val few = Seq("k1", "k9", "k17")
-    // the same three keys repeated past the 500k-key broadcast cap: the
-    // cap counts distinct keys, not rows
+    // the same three keys repeated 500,001 times: the broadcast cap
+    // counts the distinct keys' bytes, not rows
     val repeated = spark.range(500001)
       .select(element_at(typedLit(few), (col("id") % 3 + 1).cast("int")).as("id"))
-    // size-based broadcasting off, so only the lookup's own hint can
-    // broadcast (tiny frames would auto-broadcast without it)
-    val autoBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try Seq(few.toDF("id"), repeated).foreach { keys =>
+    Seq(few.toDF("id"), repeated).foreach { keys =>
       val prior = BucketedStateStore.priorFor(spark, dir, keys)
       val plan = prior.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"), s"keys must broadcast:\n${plan.take(2000)}")
@@ -166,7 +162,7 @@ class BucketedStoreSpec extends AnyFunSuite {
       assert(stateSide.contains("GreaterThanOrEqual(id,") && stateSide.contains("LessThanOrEqual(id,"),
         s"key range must be pushed to parquet:\n${stateSide.take(2500)}")
       assert(prior.collect().map(_.getAs[String]("id")).toSet === few.toSet)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoBroadcast)
+    }
   }
 
   test("delta chains compact past the threshold and tombstones are physically dropped") {

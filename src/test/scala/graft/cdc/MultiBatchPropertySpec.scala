@@ -288,9 +288,11 @@ class MultiBatchPropertySpec extends AnyFunSuite {
         OplogRow(BsonTs(50, 0).toLong, "u", "db.c", "hot", """{"$set":{"f.b":7}}""") +:
           (1 to 200).map(k =>
             OplogRow(BsonTs(50, k).toLong, "u", "db.c", s"bg${k - 1}", s"""{"$$set":{"f.b":$k}}""")))
-      // a key bound above the broadcast cap forces the planner-owned
+      // with size-based broadcasting off the stats pass collects no
+      // keys, so the key side is the raw ids and the planner owns the
       // join — the oversized-trigger path under test
-      val keys = BucketedStateStore.batchKeys(events.toDF(), "id", bound = Long.MaxValue)
+      val keys = BucketedStateStore.batchKeys(events.toDF(),
+        BucketedStateStore.batchStats(1, events.toDF(), BucketedStateStore.Cdc), "id")
       val out = BatchApplier.applyOplogBatch(events, StateStore.empty(spark), task,
         source = Some(BucketedStateStore.restrictSource(source, keys)))
       val rows = out.collect().map(r => r.getAs[String]("id") -> r.getAs[String]("doc")).toMap

@@ -204,34 +204,29 @@ class StreamScd2Spec extends AnyFunSuite {
     val few = Seq(1L, 6L, 17L)
     // the same keys repeated, as a batch with several events per key is
     val keys = (few ++ few).toDF("key")
-    // size-based broadcasting off, so only the lookup's own hint can
-    // broadcast (tiny frames would auto-broadcast without it)
-    val autoBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val prior = t.priorFor(keys)
-      val plan = prior.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"), s"keys must broadcast:\n${plan.take(2000)}")
-      val joinIdx = plan.indexOf("BroadcastHashJoin")
-      val exchIdx = plan.indexOf("BroadcastExchange", joinIdx)
-      // the build side (printed after its BroadcastExchange) carries the
-      // raw keys: no distinct aggregate before the broadcast
-      assert(!plan.substring(exchIdx).contains("HashAggregate"),
-        s"keys must broadcast without an aggregate:\n${plan.substring(exchIdx).take(2500)}")
-      // the history side (between the join and the build side's
-      // exchange) is ONE parquet scan feeding the join unshuffled, with
-      // the key range pushed to parquet
-      val historySide = plan.substring(joinIdx, exchIdx)
-      assert(!historySide.contains("Union"), s"one scan, no union:\n${historySide.take(2500)}")
-      assert("FileScan parquet".r.findAllMatchIn(plan).size === 1,
-        s"exactly one parquet scan:\n${plan.take(2500)}")
-      assert(!historySide.contains("Exchange hashpartitioning"),
-        s"history scan must reach the join unshuffled:\n${historySide.take(2500)}")
-      assert(historySide.contains("GreaterThanOrEqual(key,") && historySide.contains("LessThanOrEqual(key,"),
-        s"key range must be pushed to parquet:\n${historySide.take(2500)}")
-      val got = prior.collect().map(r => (r.getAs[Long]("key"), r.getAs[Long]("version"))).toSet
-      assert(got === few.flatMap(k => (1L to (if (k < 8L) 3L else 2L)).map(k -> _)).toSet)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoBroadcast)
+    val prior = t.priorFor(keys)
+    val plan = prior.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), s"keys must broadcast:\n${plan.take(2000)}")
+    val joinIdx = plan.indexOf("BroadcastHashJoin")
+    val exchIdx = plan.indexOf("BroadcastExchange", joinIdx)
+    // the build side (printed after its BroadcastExchange) is the
+    // stats pass's collected keys: no distinct aggregate before the
+    // broadcast
+    assert(!plan.substring(exchIdx).contains("HashAggregate"),
+      s"keys must broadcast without an aggregate:\n${plan.substring(exchIdx).take(2500)}")
+    // the history side (between the join and the build side's
+    // exchange) is ONE parquet scan feeding the join unshuffled, with
+    // the key range pushed to parquet
+    val historySide = plan.substring(joinIdx, exchIdx)
+    assert(!historySide.contains("Union"), s"one scan, no union:\n${historySide.take(2500)}")
+    assert("FileScan parquet".r.findAllMatchIn(plan).size === 1,
+      s"exactly one parquet scan:\n${plan.take(2500)}")
+    assert(!historySide.contains("Exchange hashpartitioning"),
+      s"history scan must reach the join unshuffled:\n${historySide.take(2500)}")
+    assert(historySide.contains("GreaterThanOrEqual(key,") && historySide.contains("LessThanOrEqual(key,"),
+      s"key range must be pushed to parquet:\n${historySide.take(2500)}")
+    val got = prior.collect().map(r => (r.getAs[Long]("key"), r.getAs[Long]("version"))).toSet
+    assert(got === few.flatMap(k => (1L to (if (k < 8L) 3L else 2L)).map(k -> _)).toSet)
   }
 
   test("bucketed history: a restart with a DIFFERENT constructor nBuckets honors the on-disk layout") {
