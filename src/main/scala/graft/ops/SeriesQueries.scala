@@ -1650,11 +1650,12 @@ object SeriesQueries {
     // ONE corpus pass reduces to the |types|² matrix; the matrix is
     // BOUNDED (≤25 rows), so the iteration runs on the driver over the
     // collected frame — the bounded-collect codebook pattern (K-row
-    // frames may cross the driver; corpora may not). Unlike
-    // sim_pagerank_central (O(N) frontiers that must iterate
-    // distributed), distributing 8 rounds of 5-row joins only buys 16
-    // fixed-cost tiny shuffle stages (measured: 1.3 s of pure
-    // scheduling); the driver fold is arithmetic on 25 longs.
+    // frames may cross the driver; corpora may not). Distributing 8
+    // rounds of 5-row joins only buys 16 fixed-cost tiny shuffle stages
+    // (measured: 1.3 s of pure scheduling); the driver fold is
+    // arithmetic on 25 longs. sim_pagerank_central folds the same way
+    // while its O(N) graph fits under the broadcast threshold's bytes,
+    // and iterates distributed only above it.
     val trans = ev(spark, dir)
       .withColumn("from_type", lag(col("event_type"), 1).over(
         Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))))

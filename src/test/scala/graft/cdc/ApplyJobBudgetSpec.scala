@@ -1,16 +1,12 @@
 package graft.cdc
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
-import graft.TestSpark
+import graft.{JobRecorder, TestSpark}
 import graft.model.{BsonTs, TaskSpec}
 
 /** The bucketed apply's Spark-job budget: a persisted micro-batch is
@@ -69,50 +65,7 @@ class ApplyJobBudgetSpec extends AnyFunSuite {
       key(n) -> s"""{"_id":"${key(n)}","value":1.0}""",
       key(n + 1) -> s"""{"_id":"${key(n + 1)}","value":50.0}""")
 
-  /** Jobs per job group and each finished query's executed plan, read
-    * once a marker job's end event has come through the listener bus. */
-  private final class Recorder extends SparkListener with QueryExecutionListener {
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val plans = new ConcurrentLinkedQueue[String]()
-    @volatile var markerDone = false
-    private val markerJobs = new ConcurrentLinkedQueue[Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val group = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      if (group == "budget-marker") markerJobs.add(e.jobId) else jobs.add(group)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (markerJobs.contains(e.jobId)) markerDone = true
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      plans.add(qe.executedPlan.toString)
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      sc.setJobGroup("budget-marker", "listener drain")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!markerDone && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(markerDone, "the listener bus did not drain")
-    }
-    /** Query listeners run on another queue than the job events. */
-    def awaitPlan(p: String => Boolean): Seq[String] = {
-      val deadline = System.currentTimeMillis() + 30000
-      while (!plans.asScala.exists(p) && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      plans.asScala.filter(p).toSeq
-    }
-    def count(group: String): Int = jobs.asScala.count(_ == group)
-  }
-
-  private def recorded[A](body: Recorder => A): A = {
-    val rec = new Recorder
-    spark.sparkContext.addSparkListener(rec)
-    spark.listenerManager.register(rec)
-    try body(rec)
-    finally {
-      spark.sparkContext.removeSparkListener(rec)
-      spark.listenerManager.unregister(rec)
-    }
-  }
+  private def recorded[A](body: JobRecorder => A): A = JobRecorder.recorded(spark)(body)
 
   /** Apply one persisted batch with a source and the bulk hook: the
     * apply runs under job group `budget-apply`, the bulk write under

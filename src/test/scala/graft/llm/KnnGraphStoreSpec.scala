@@ -128,6 +128,80 @@ class KnnGraphStoreSpec extends AnyFunSuite {
     assert(again.toVector === out.toVector)
   }
 
+  private def withThreshold[A](v: String)(body: => A): A = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toVector
+
+  test("pagerank centrality: the driver fold and the distributed loop return bit-identical rows") {
+    val q = graft.SparkEntry.queries("sim_pagerank_central")
+    val folded = q(spark, dir)
+    assert(folded.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+    }.isDefined, "under the default threshold the query folds on the driver")
+    val distributed = withThreshold("-1")(rowsOf(q(spark, dir)))
+    assert(distributed.nonEmpty)
+    assert(distributed === rowsOf(folded))
+  }
+
+  // A hand-built graph: cell 10 holds nodes 1-4, cell 20 node 5. Node 5
+  // has no out-edge (dangling), and 3 -> 9 points at a vertex that is
+  // not a node: the edge is dropped but counts in 3's out-degree.
+  private val handNodes = Seq(1L -> 10L, 2L -> 10L, 3L -> 10L, 4L -> 10L, 5L -> 20L)
+  private val handEdges = Seq(1L -> 2L, 1L -> 3L, 2L -> 1L, 3L -> 1L, 3L -> 9L, 4L -> 5L, 4L -> 1L)
+
+  private def both(nodes: Seq[(Long, Long)], edges: Seq[(Long, Long)], rounds: Int) = {
+    import spark.implicits._
+    val a = nodes.toDF("vec_id", "cid")
+    val e = edges.toDF("src_id", "dst_id")
+    val folded = SimilarityQueries.pagerankOnDriver(a, e, rounds)
+    assert(folded.isDefined, "a 5-node graph fits under the default threshold")
+    (rowsOf(folded.get), rowsOf(SimilarityQueries.pagerankDistributed(a, e, rounds)))
+  }
+
+  test("pagerank centrality: a dangling node and an edge out of the graph, on both paths") {
+    val (folded, distributed) = both(handNodes, handEdges, 1)
+    assert(folded === distributed)
+    // one round by hand, in 1e9 micro-units: every node starts at 200;
+    // base = 15e12 DIV 500 = 30; dangling mass 200 DIV 5 = 40 to each node;
+    // inflow 1: 200 (2) + 100 (3) + 100 (4), 2: 100, 3: 100, 4: 0, 5: 100
+    // (4's other half); pr = base + 85 * (inflow + 40) DIV 100
+    val g = 1000000000L
+    assert(folded === Vector(
+      (10L, 1, 1L, 404 * g), (10L, 2, 2L, 149 * g), (10L, 3, 3L, 149 * g), (20L, 1, 5L, 149 * g)))
+  }
+
+  test("pagerank centrality: total mass after 8 rounds stays within the flooring loss of 1e12") {
+    // every node its own cell, so the top 3 is every score, and no edge
+    // leaves the graph, so only flooring loses mass
+    val nodes = handNodes.map { case (v, _) => v -> v }
+    val edges = handEdges.filter(_._2 != 9L)
+    val (folded, distributed) = both(nodes, edges, 8)
+    assert(folded === distributed)
+    val total = folded.map(_._4).sum
+    val scale = 1000000000000L
+    info(s"total mass $total")
+    // flooring loses 16 micro-units over the 8 rounds here; allow N a round
+    assert(total <= scale && total >= scale - nodes.size * 8, s"total mass $total")
+  }
+
+  test("pagerank centrality: the driver fold declines a graph past its byte cap") {
+    import spark.implicits._
+    val a = handNodes.toDF("vec_id", "cid")
+    val e = handEdges.toDF("src_id", "dst_id")
+    assert(withThreshold("-1")(SimilarityQueries.pagerankOnDriver(a, e, 1)).isEmpty,
+      "threshold -1 turns the driver fold off")
+    // 5 nodes and 7 edges are 12 rows of 40 bytes: 480 bytes
+    assert(withThreshold("480b")(SimilarityQueries.pagerankOnDriver(a, e, 1)).isDefined)
+    assert(withThreshold("400b")(SimilarityQueries.pagerankOnDriver(a, e, 1)).isEmpty,
+      "the nodes fit under 400 bytes, the edges pass it")
+    assert(withThreshold("160b")(SimilarityQueries.pagerankOnDriver(a, e, 1)).isEmpty,
+      "the nodes alone pass 160 bytes")
+  }
+
   test("assortativity: sufficient statistics match a direct model over the sidecar edges") {
     val row = graft.SparkEntry.queries("sim_graph_assort")(spark, dir).collect().head
     val edges = graft.llm.KnnGraphStore.loadOrBuild(spark, dir)

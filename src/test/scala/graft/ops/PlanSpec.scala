@@ -727,8 +727,19 @@ class PlanSpec extends AnyFunSuite {
       "no window over corpus rows — the pairwise mean collapses algebraically")
   }
 
-  test("pagerank centrality: sidecar-only dataflow, map-side per-cell top-3") {
+  test("pagerank centrality under the byte cap: the driver fold plans one local relation") {
     val p = plan("sim_pagerank_central")
+    assert(p.contains("LocalTableScan"),
+      "the per-cell top-3 folded on the driver returns as a local relation: " + p.take(800))
+    assert(!p.contains("FileScan") && !p.contains("Parquet") && !p.contains("Exchange"),
+      "no scan and no exchange may follow the driver fold: " + p.take(800))
+  }
+
+  test("pagerank centrality: sidecar-only dataflow, map-side per-cell top-3") {
+    // threshold -1 turns the driver fold off: the distributed loop runs
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val p = try plan("sim_pagerank_central")
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(!p.contains("FileScan") && !p.contains("Parquet"),
       "iteration state and edges are pinned sidecar frames — the corpus " +
         "parquet must never be scanned by the query's own plan: " + p.take(800))
