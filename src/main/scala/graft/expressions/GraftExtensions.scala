@@ -16,9 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * spark.sql("SELECT dot_product(a, b), json_all_keys_dollar(doc) ...")
   * }}}
   *
-  * The Column-API forms ([[VectorFunctions.dot]],
-  * [[functions.json_all_keys_dollar]]) build the same expressions
-  * directly; registration only adds the SQL-surface names. No custom
+  * The Column-API forms (e.g. [[VectorFunctions.dot]]) build the same
+  * expressions directly; registration adds the SQL-surface names, and
+  * is the only surface of `json_all_keys_dollar`. No custom
   * optimizer rules or strategies are injected — SURVEY.md §7.3: every
   * engine operator lowers to built-in physical operators, so Catalyst
   * needs no planner help, only these scalar primitives.

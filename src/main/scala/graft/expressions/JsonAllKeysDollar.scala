@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,12 +30,6 @@ case class JsonAllKeysDollar(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): JsonAllKeysDollar =
     copy(child = newChild)
-}
-
-object functions {
-  /** Column form of [[JsonAllKeysDollar]]. */
-  def json_all_keys_dollar(c: Column): Column =
-    GraftColumnBridge.column(JsonAllKeysDollar(GraftColumnBridge.expression(c)))
 }
 
 /** Allocation-free top-level-key scanner (called from generated code —

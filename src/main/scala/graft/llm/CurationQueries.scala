@@ -328,9 +328,8 @@ object CurationQueries {
 
   // The trained-model twin (r13 verdict #6): the SAME binning over the
   // weights LrModel trained to its 6-dp fixpoint. The fixed-weight
-  // query above stays as-is — it anchors the streaming twins
-  // (StreamCalibration/StreamPsi score with the fixed weights inlined
-  // row-side) — while this one closes the loop model-training →
+  // query above stays as-is (eval_psi_drift scores with the same fixed
+  // weights), while this one closes the loop model-training →
   // persisted sidecar → calibration eval. Its oracle SQL inlines the
   // trained weights (codebookSql pattern: Verify renders oracle SQL
   // AFTER the queries ran, so the literals are the exact doubles the

@@ -463,7 +463,7 @@ object Multimodal {
 
   /** Image near-duplicate pairs by perceptual hash: per-payload aHash
     * (real pixels for images, byte-stripe fallback for the fixture),
-    * single-band LSH on the hash's 12-bit prefix (the StreamNearDedup
+    * single-band LSH on the hash's 12-bit prefix (the dedup_simhash
     * bucketing), Hamming <= 12 of 48 within the bucket.
     *
     * Scale shape: the hash is a partition-local projection over the

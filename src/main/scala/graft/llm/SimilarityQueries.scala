@@ -1663,11 +1663,8 @@ object SimilarityQueries {
   // snap at 6 dp; the dot products run left-to-right over the same
   // 6-dp arrays in both engines (the dedup_embedding_pairs
   // list_dot_product discipline); sqrt is IEEE-exact.
-  /** Per-(label, half) 6-dp centroid arrays — shared by the batch
-    * drift query and StreamCentroidDrift.referenceFrom (the streaming
-    * twin's static reference must be THIS exact arithmetic or the
-    * bit-exactness contract breaks). */
-  private[graft] def centroidMeans(spark: SparkSession, dir: String): DataFrame = {
+  /** Per-(label, half) 6-dp centroid arrays of the drift query. */
+  private def centroidMeans(spark: SparkSession, dir: String): DataFrame = {
     val comp = Tables.table(spark, dir, "embeddings")
       .select(col("label"), pmod(col("vec_id"), lit(2)).as("half"),
         posexplode(col("embedding")).as(Seq("dim", "x")))
@@ -2601,8 +2598,8 @@ object SimilarityQueries {
   // 2004). Runs entirely off the index sidecar: the corpus parquet is
   // never scanned (PlanSpec pins a FileScan-free final plan).
   //
-  // Determinism: EVERY quantity is integer micro-units (the StreamCusum
-  // discipline) — scores carry 1e12 scale, per-edge contributions are
+  // Determinism: EVERY quantity is integer micro-units — scores carry
+  // 1e12 scale, per-edge contributions are
   // integer floor division pr DIV outd, the damping split is
   // (15·S) DIV (100·N) + (85·(inflow + dang DIV N)) DIV 100. No float
   // ever forms, so both engines are bit-exact with NO snapping at all

@@ -2,11 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 
-/** The Count-Min sketch's fixed geometry and hash family, shared by the
-  * batch accuracy audit (`agg_countmin_audit`, [[StatsQueries]]) and
-  * the streaming maintainer ([[graft.streaming.StreamCountMin]]) so the
-  * two build THE SAME 256 counters — the offline/online equivalence
-  * every monitoring twin here pins.
+/** The Count-Min sketch's fixed geometry and hash family for the batch
+  * accuracy audit (`agg_countmin_audit`, [[StatsQueries]]): depth 4 ×
+  * width 64 = 256 counters.
   *
   * Hashes are the standard pairwise-independent family
   * h_d(u) = ((a_d·u + b_d) mod P) mod W with P = 2^31 − 1 (a Mersenne
@@ -19,17 +17,7 @@ object CountMin {
   val P = 2147483647L
   val A = Vector(1048573L, 2097143L, 524287L, 131071L)
   val B = Vector(12289L, 786433L, 40961L, 5L)
-  def depth: Int = A.size
 
   /** Column form of h_d. */
   def idxCol(d: Int, u: Column): Column = ((u * A(d) + B(d)) % P) % W
-
-  /** Scala form of h_d — bit-identical to [[idxCol]]. */
-  def idx(d: Int, u: Long): Long = ((u * A(d) + B(d)) % P) % W
-
-  /** Point query: min over depths of the (d, h_d(u)) counter; a cell
-    * never touched counts 0 (it cannot happen for a present key — its
-    * own increments are in every depth's cell). */
-  def estimate(counters: Map[(Int, Long), Long], u: Long): Long =
-    (0 until depth).map(d => counters.getOrElse((d, idx(d, u)), 0L)).min
 }

@@ -3,8 +3,8 @@ package graft.ops
 /** The LSH prefix-width knob (r12 verdict #4).
   *
   * Every prefix-bucketed near-dup operator (multimodal_phash_pairs'
-  * 12 of 48 bits, dedup_simhash/_pairs' 16 of 60, StreamNearDedup's
-  * 16-bit state key) keeps E[bucket occupancy] = N / 2^bits constant
+  * 12 of 48 bits, dedup_simhash/_pairs' 16 of 60) keeps
+  * E[bucket occupancy] = N / 2^bits constant
   * only when the prefix width tracks log₂(N): at the fixture's ~10⁴
   * docs 12 bits holds buckets at ~unity, but at 10⁶+ docs a fixed
   * width densifies candidate volume superlinearly (measured 12.6k →

@@ -123,9 +123,9 @@ object MonitorQueries {
   // ---------------------------------------------------------------
   // CUSUM drift detection per user over the (sec, event_id)-ordered
   // value sequence. Per user: baseline mean mu and stddev sigma from
-  // the series itself (an offline deployment supplies these from a
-  // reference window — the streaming twin StreamCusum takes them as a
-  // parameter), slack k = sigma/2, alarm threshold h = 4*sigma.
+  // the series itself (a deployment would profile them from a
+  // reference window instead), slack k = sigma/2, alarm threshold
+  // h = 4*sigma.
   // d_i = x_i - mu - k; the one-sided CUSUM statistic
   // S_i = max(0, S_{i-1} + d_i) flags upward drift when S_i > h.
   //
@@ -669,10 +669,8 @@ object MonitorQueries {
         sum(when(col("stage") === "resurrected", 1L).otherwise(0L)).as("n_resurrected"),
         count(lit(1)).as("wau"))
     // FULL outer: a week where every remaining user churned (zero
-    // activity, churn > 0) is a real report row (wau=0) — and exactly
-    // the row the streaming twin's timers emit, so StreamGrowthSpec
-    // hashes batch ≡ stream on the FULL week set (r14 verdict #8; the
-    // week list is "weeks with any verdict", not "weeks with activity")
+    // activity, churn > 0) is a real report row (wau=0); the week list
+    // is "weeks with any verdict", not "weeks with activity"
     weekly.join(churn, Seq("week"), "full_outer")
       .withColumn("wau", coalesce(col("wau"), lit(0L)))
       .withColumn("n_new", coalesce(col("n_new"), lit(0L)))

@@ -5,10 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Incremental SCD Type-2 maintenance — the streaming twin of the
-  * `cdc_scd2_history` batch build (graft.ops.CdcQueries), completing
-  * the batch/streaming twin set (exact dedup, near-dedup, sessions,
-  * anomaly, ... and now dimension history).
+/** Incremental SCD Type-2 maintenance — the streaming form of the
+  * `cdc_scd2_history` batch build (graft.ops.CdcQueries).
   *
   * Each micro-batch of change events MERGEs into the history table:
   * no-op updates collapse (an event whose tracked attribute equals the

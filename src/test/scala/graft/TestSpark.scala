@@ -18,24 +18,9 @@ object TestSpark {
     s
   }
 
-  /** Run `body` with the RocksDB state store provider (required by
-    * transformWithState) set on the shared session, restoring the prior
-    * provider afterwards so later suites see the default. */
-  def withRocksDB[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Pin a directory's (and its files') mtimes so FileStreamSource —
     * which orders files by modification time — processes fixture
-    * batches in the intended order. Shared by the streaming specs. */
+    * batches in the intended order. */
   def touch(dir: String, sec: Long): Unit = {
     val d = java.nio.file.Paths.get(dir)
     val s = java.nio.file.Files.list(d)

@@ -246,6 +246,22 @@ class RoundThirteenSpec extends AnyFunSuite {
       "u3 resurrects at w2, u1 retains, u2 churns, u4 is new")
     assert(got(3L) === ((3L, 0L, 3L, 0L, 0L)))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+
+    // a week where nobody is active but users churn is still a row
+    // (wau=0): u5 w0,w1; u6 w0; u7 w0 then back at w3
+    val quiet = java.nio.file.Files.createTempDirectory("ga_quiet").toString
+    (Seq(evRow(5L, 0L, 500L), evRow(5L, 1L, 501L), evRow(6L, 0L, 600L)) ++
+      Seq(evRow(7L, 0L, 700L), evRow(7L, 3L, 703L)))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.parquet(s"$quiet/events.parquet")
+    val gotQuiet = graft.SparkEntry.queries("events_growth_accounting")(spark, quiet)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+    assert(gotQuiet.keySet === Set(0L, 1L, 2L, 3L))
+    assert(gotQuiet(1L) === ((1L, 0L, 1L, 0L, 2L)), "u6 and u7 churn at w1")
+    assert(gotQuiet(2L) === ((0L, 0L, 0L, 0L, 1L)), "all-churned week: wau=0, u5 churns")
+    assert(gotQuiet(3L) === ((1L, 0L, 0L, 1L, 0L)), "u7 resurrects at w3")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(quiet))
   }
 
   test("layout_shard_skew: masses partition the corpus, load factors center on 1") {

@@ -512,27 +512,32 @@ class SeriesForensicsSpec extends AnyFunSuite {
   test("funnel latency: step/total distributions match a direct funnel model") {
     // the funnel chain compares raw MICROSECOND timestamps (only the
     // reported diffs truncate to seconds), so the model works in micros;
-    // sf0.01 is the smallest fixture with step-3 conversions (see
-    // StreamFunnelSpec)
+    // sf0.01 is the smallest fixture with step-3 conversions
     val latDir = "/root/testdata/sf0.01"
     val micro = graft.ops.Tables.events(spark, latDir)
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     val byUser = micro.groupBy(_._1)
-    val lat = byUser.values.flatMap { es =>
+    val chains = byUser.values.map { es =>
       val t1 = es.filter(_._2 == "click").map(_._3).minOption
       val t2 = t1.flatMap(v1 => es.filter(e => e._2 == "view" && e._3 >= v1).map(_._3).minOption)
       val t3 = t2.flatMap(v2 => es.filter(e =>
         e._2 == "purchase" && e._3 >= v2 && e._3 <= v2 + 3600L * 1000000L).map(_._3).minOption)
-      (t1, t2, t3) match {
-        case (Some(a), Some(b), Some(c)) =>
-          Some((b / 1000000L - a / 1000000L, c / 1000000L - b / 1000000L,
-            c / 1000000L - a / 1000000L))
-        case _ => None
-      }
+      (t1, t2, t3)
     }.toVector
+    val lat = chains.collect { case (Some(a), Some(b), Some(c)) =>
+      (b / 1000000L - a / 1000000L, c / 1000000L - b / 1000000L,
+        c / 1000000L - a / 1000000L)
+    }
     assert(lat.nonEmpty, "fixture must have conversions")
+    // the same chain is events_funnel_steps' per-step user count
+    val steps = graft.SparkEntry.queries("events_funnel_steps")(spark, latDir).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(steps === Seq(
+      (1L, "click", chains.count(_._1.nonEmpty).toLong),
+      (2L, "click>view", chains.count(_._2.nonEmpty).toLong),
+      (3L, "click>view>purchase", lat.size.toLong)))
     def pct(vs: Vector[Long], p: Double): Double = {
       val s = vs.sorted.map(_.toDouble)
       val h = (s.length - 1) * p
